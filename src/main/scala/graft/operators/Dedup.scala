@@ -610,7 +610,7 @@ object Dedup {
     * itself — so a crash mid-write loses only derived data, rebuildable by
     * re-running this call. A store whose only copy is itself (the CC
     * labeling, the partials table) must instead go through
-    * [[graft.sources.VersionedStore]] / per-batch partitions; see
+    * [[graft.sources.MultiStore]] / per-batch partitions; see
     * GraphOps.foldLabelsBatch and Rollup.foldPartialsBatch.
     */
   def writeBandIndex(bands: DataFrame, path: String, shards: Int = BandIndexShards): Unit = {

@@ -755,70 +755,65 @@ object GraphOps {
     parent.keys.map(n => n -> find(n)).toMap
   }
 
-  /** One micro-batch of label maintenance, exposed for direct testing and
-    * for batch-mode catchup: fold `batch`'s edges into the store at
-    * `labelsRoot` via [[mergeNewEdges]] and commit the result as a NEW
-    * [[graft.sources.VersionedStore]] version with an atomic repoint. The
-    * live version's files are never touched by the write, so a crash at
-    * ANY point — mid-merge, mid-write, before the repoint — leaves the
-    * previous complete labeling readable (the r8 verdict's durability
-    * window: read + localCheckpoint + Overwrite-same-dir lost the only
-    * copy if the overwrite died mid-write). Re-running a batch is
-    * harmless: merging already-known edges yields the identical labeling
-    * (empty label-pair set), just as a fresh version.
+  /** The store a label-maintenance root keeps its (node, component)
+    * labeling in; [[streamingLabelMaintenance]] also uses it as the sink
+    * id of its `labels.txn` batch marker.
     */
-  def foldLabelsBatch(batch: DataFrame, labelsRoot: String): Unit = {
-    val spark  = batch.sparkSession
-    val cur    = graft.sources.VersionedStore.read(spark, labelsRoot)
-    val merged = mergeNewEdges(cur, batch, spark)
-    graft.sources.VersionedStore.write(merged, labelsRoot)
-    ()
+  private val LabelsStore = "labels"
+
+  /** `batch`'s edges folded into the live labeling at `root` via
+    * [[mergeNewEdges]].
+    */
+  private def foldedLabels(batch: DataFrame, root: String): DataFrame = {
+    val spark = batch.sparkSession
+    mergeNewEdges(graft.sources.MultiStore.read(spark, root, LabelsStore), batch, spark)
   }
 
-  /** The paired-update shape [[graft.sources.MultiStore]] exists for
-    * (VERDICT r9 ask #4): fold a batch of edges into the labeling AND
-    * commit a companion store (rollup partials, batch bookkeeping — any
-    * table that must stay consistent with the labels) in the SAME
-    * snapshot. Both stores live under one MultiStore root; the commit is
-    * one manifest rename, so no reader — and no crash — can observe new
-    * labels beside the old companion or vice versa. Seed with
-    * `MultiStore.commit(root, Map("labels" -> initial, "companion" -> ...))`.
+  /** One micro-batch of label maintenance, exposed for direct testing and
+    * for batch-mode catchup: fold `edgesBatch` into the labeling at the
+    * [[graft.sources.MultiStore]] `root` and commit it together with any
+    * `companions` (rollup partials, batch bookkeeping — any table that must
+    * stay consistent with the labels) as ONE snapshot. The live version's
+    * files are never touched by the write, so a crash at ANY point —
+    * mid-merge, mid-write, before the manifest lands — leaves the previous
+    * complete labeling (and companions) readable, and no reader can
+    * observe new labels beside old companions. Re-running a batch is
+    * harmless: merging already-known edges yields the identical labeling
+    * (empty label-pair set), just as a fresh version. Seed with
+    * `MultiStore.commit(root, Map("labels" -> initial, ...))`.
     */
-  def foldLabelsBatchPaired(
-      edgesBatch: DataFrame,
-      companion: DataFrame,
-      root: String,
-      labelsStore: String = "labels",
-      companionStore: String = "companion"): Unit = {
-    val spark  = edgesBatch.sparkSession
-    val cur    = graft.sources.MultiStore.read(spark, root, labelsStore)
-    val merged = mergeNewEdges(cur, edgesBatch, spark)
-    graft.sources.MultiStore.commit(root, Map(labelsStore -> merged, companionStore -> companion))
+  def foldLabelsBatch(edgesBatch: DataFrame, root: String,
+                      companions: Map[String, DataFrame] = Map.empty): Unit = {
+    graft.sources.MultiStore.commit(root,
+      companions + (LabelsStore -> foldedLabels(edgesBatch, root)))
     ()
   }
 
   /** Streaming half of the x53 contract: keep a persisted (node,
     * component) labeling current as edges land. Each micro-batch folds its
-    * edges into the store via [[foldLabelsBatch]] — batch-bound fixpoint,
-    * corpus relabel by broadcast, versioned-commit swap (see there for the
-    * crash-safety contract). foreachBatch, not a stateful streaming agg:
-    * the labeling is bounded by the node count, not stream history, so
-    * there is no watermark/state question — zero streaming state, same
-    * discipline as Rollup.streamingPartials and the stateless near-dup
-    * ingest probe.
+    * edges into the labeling as [[foldLabelsBatch]] does — batch-bound
+    * fixpoint, corpus relabel by broadcast — and commits it through
+    * `MultiStore.commitBatch` under foreachBatch's batch id, so a batch
+    * re-delivered after a crash-restart writes nothing. foreachBatch, not
+    * a stateful streaming agg: the labeling is bounded by the node count,
+    * not stream history, so there is no watermark/state question — zero
+    * streaming state, same discipline as Rollup.streamingPartials and the
+    * stateless near-dup ingest probe.
     *
-    * `labelsRoot` is a [[graft.sources.VersionedStore]] root (seed it with
-    * `VersionedStore.write(initialLabels, root)`); read the live labeling
-    * with `VersionedStore.read`.
+    * `root` is a [[graft.sources.MultiStore]] root (seed it with
+    * `MultiStore.commit(root, Map("labels" -> initialLabels))`); read the
+    * live labeling with `MultiStore.read(spark, root, "labels")`.
     */
   def streamingLabelMaintenance(
       edges: DataFrame,
-      labelsRoot: String,
+      root: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
     edges.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        foldLabelsBatch(batch, labelsRoot)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        graft.sources.MultiStore.commitBatch(root, LabelsStore, batchId,
+          Map(LabelsStore -> foldedLabels(batch, root)))
+        ()
       }
       .start()
 }

@@ -217,8 +217,9 @@ object LayoutOps {
   }
 
   /** OPTIMIZE ZORDER BY — Delta's multi-dimensional compaction verb, the
-    * composition of [[graft.sources.MultiStore.optimize]]'s CAS-pinned
-    * snapshot commit with this file's Morton machinery: read the live
+    * composition of the CAS-pinned rewrite behind
+    * [[graft.sources.MultiStore.optimize]] (`MultiStore.rewritePinned`)
+    * with this file's Morton machinery: read the live
     * version, rank-scale each dimension by its measured min/max (one
     * 1-row aggregate), interleave, range-cluster into `targetFiles`
     * internally-sorted files, and commit with fresh zone maps on EVERY
@@ -231,22 +232,19 @@ object LayoutOps {
   def optimizeZorder(spark: org.apache.spark.sql.SparkSession, root: String,
                      store: String, targetFiles: Int, zCols: Seq[String],
                      bits: Int, keep: Int = 2): Map[String, Long] = {
-    import graft.sources.MultiStore
     require(zCols.size >= 2, "optimizeZorder: z-order needs at least two dimensions")
-    val v = MultiStore.snapshot(spark, root).getOrElse(store,
-      throw new IllegalStateException(s"optimizeZorder: no committed store '$store' at $root"))
-    val data = MultiStore.read(spark, root, store)
-    val aggs = zCols.flatMap(c =>
-      Seq(min(col(c)).cast("long").as(s"mn_$c"), max(col(c)).cast("long").as(s"mx_$c")))
-    val mm = data.agg(aggs.head, aggs.tail: _*).head()
-    val scaled = zCols.zipWithIndex.map { case (c, i) =>
-      rankScale(col(c), lit(mm.getLong(2 * i)), lit(mm.getLong(2 * i + 1)), bits)
+    graft.sources.MultiStore.rewritePinned(spark, root, store, keep,
+      stats = Map(store -> zCols)) { (data, _) =>
+      val aggs = zCols.flatMap(c =>
+        Seq(min(col(c)).cast("long").as(s"mn_$c"), max(col(c)).cast("long").as(s"mx_$c")))
+      val mm = data.agg(aggs.head, aggs.tail: _*).head()
+      val scaled = zCols.zipWithIndex.map { case (c, i) =>
+        rankScale(col(c), lit(mm.getLong(2 * i)), lit(mm.getLong(2 * i + 1)), bits)
+      }
+      Map(store -> clusterByZ(
+        data.withColumn("__z", interleaveBits(scaled, bits)), col("__z"), targetFiles)
+        .drop("__z")) // projection after the exchange: partitioning survives
     }
-    val shaped = clusterByZ(
-      data.withColumn("__z", interleaveBits(scaled, bits)), col("__z"), targetFiles)
-      .drop("__z") // projection after the exchange: partitioning survives
-    MultiStore.commitIf(root, Map(store -> shaped), Map(store -> Some(v)), keep,
-      stats = Map(store -> zCols))
   }
 
   /** m21: OPTIMIZE ZORDER driver-stamped — a hash-scattered ingest layout

@@ -4,8 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Atomic filesystem primitives for claim/publish protocols.
   *
-  * The concurrency story of [[MultiStore]] / [[VersionedStore]] /
-  * `Maintenance.merge` rests on two operations being ATOMIC mutual-
+  * The concurrency story of [[MultiStore]] and `Maintenance.merge`
+  * rests on two operations being ATOMIC mutual-
   * exclusion points: "create this file iff absent" (version claims, merge
   * locks) and "install this name iff absent" (manifest publish). On HDFS
   * both hold natively (`create(overwrite=false)` and `rename` are

@@ -5,11 +5,13 @@ import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Liter
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min, xxhash64}
 
-/** Multi-table snapshot commits over VersionedStore-style parquet stores —
-  * the transaction-log shape a lakehouse user expects when two
-  * self-maintained stores must advance TOGETHER (e.g. the x53 CC label
-  * store and its companion edge/partials store: a reader must never see
-  * new labels beside old partials).
+/** Multi-table snapshot commits over immutable parquet store versions —
+  * the repository's ONLY versioned-store protocol: every self-maintained
+  * store whose only copy is itself (the x53 CC label store, its companion
+  * stores, ingest tables) commits through it, one store or many. It is the
+  * transaction-log shape a lakehouse user expects when two stores must
+  * advance TOGETHER (a reader must never see new labels beside old
+  * partials).
   *
   * Layout under one `root`:
   *
@@ -17,8 +19,8 @@ import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, mi
   *   root/_graft_manifest_m=<m>   numbered manifest files, each the FULL
   *                                snapshot: one `store=version` line per
   *                                store
-  *   root/<store>/_graft_claim_v=<n>  exclusive version claims (as in
-  *                                [[VersionedStore]])
+  *   root/<store>/_graft_claim_v=<n>  exclusive version claims
+  *                                ([[AtomicFs.claim]])
   *
   * The commit is ONE atomic rename of a tmp file into the next numbered
   * manifest name — readers resolve the highest complete manifest, so a
@@ -90,13 +92,28 @@ object MultiStore {
       .getOrElse(Map.empty)
   }
 
-  /** Read one store at the live snapshot. */
-  def read(spark: SparkSession, root: String, store: String): DataFrame = {
-    val v = snapshot(spark, root).getOrElse(
-      store,
+  /** `root/<store>/<kind>=<v>`: a data version (`v`) or one of its
+    * zone-map (`stats_v`) / Bloom (`bloom_v`) sidecars.
+    */
+  private def versionDir(root: String, store: String, v: Long, kind: String = "v"): String =
+    s"${root.stripSuffix("/")}/$store/$kind=$v"
+
+  /** The one live-version lookup: `store`'s version in an already-read
+    * snapshot. Every reader and rewriter resolves through a snapshot it
+    * read ONCE, so the data, delete set and sidecars it opens all come
+    * from the same manifest.
+    */
+  private def version(root: String, snap: Map[String, Long], store: String): Long =
+    snap.getOrElse(store,
       throw new IllegalStateException(s"MultiStore at $root has no committed store '$store'"))
-    spark.read.parquet(s"${root.stripSuffix("/")}/$store/v=$v")
-  }
+
+  private def readIn(spark: SparkSession, root: String, snap: Map[String, Long],
+                     store: String): DataFrame =
+    spark.read.parquet(versionDir(root, store, version(root, snap, store)))
+
+  /** Read one store at the live snapshot. */
+  def read(spark: SparkSession, root: String, store: String): DataFrame =
+    readIn(spark, root, snapshot(spark, root), store)
 
   /** Retained manifest numbers, ascending — the snapshot HISTORY. Each is
     * a complete, immutable, readable snapshot until pruning drops it
@@ -118,12 +135,8 @@ object MultiStore {
   }
 
   /** Time-travel read: one store as of manifest `m`. */
-  def readAt(spark: SparkSession, root: String, store: String, m: Long): DataFrame = {
-    val v = snapshotAt(spark, root, m).getOrElse(
-      store,
-      throw new IllegalStateException(s"MultiStore at $root: store '$store' absent at manifest m=$m"))
-    spark.read.parquet(s"${root.stripSuffix("/")}/$store/v=$v")
-  }
+  def readAt(spark: SparkSession, root: String, store: String, m: Long): DataFrame =
+    readIn(spark, root, snapshotAt(spark, root, m), store)
 
   // ---- row-level deletes (merge-on-read equality deletes) -----------------
 
@@ -159,20 +172,20 @@ object MultiStore {
     require(keyCols.nonEmpty, "deleteWhere: at least one key column")
     var attempts = 0
     while (true) {
-      val delVersion = snapshot(spark, root).get(deletesStore(store))
-      val newKeys = readMerged(spark, root, store)
+      val snap     = snapshot(spark, root)
+      val existing = deletesIn(spark, root, snap, store)
+      val newKeys  = mergedIn(spark, root, snap, store)
         .filter(cond).select(keyCols.map(col): _*).distinct()
-      val allKeys = delVersion match {
-        case Some(_) =>
-          val existing = read(spark, root, deletesStore(store))
-          require(existing.columns.sorted.toSeq == keyCols.sorted,
+      val allKeys = existing match {
+        case Some(del) =>
+          require(del.columns.sorted.toSeq == keyCols.sorted,
             s"deleteWhere: key columns ${keyCols.mkString(",")} differ from the " +
-              s"store's existing delete schema ${existing.columns.mkString(",")}")
-          existing.unionByName(newKeys).distinct()
+              s"store's existing delete schema ${del.columns.mkString(",")}")
+          del.unionByName(newKeys).distinct()
         case None => newKeys
       }
       try return commitIf(root, Map(deletesStore(store) -> allKeys),
-        Map(deletesStore(store) -> delVersion), keep)
+        Map(deletesStore(store) -> snap.get(deletesStore(store))), keep)
       catch {
         case e: java.util.ConcurrentModificationException =>
           attempts += 1
@@ -187,46 +200,67 @@ object MultiStore {
     * plain [[read]].
     */
   def readMerged(spark: SparkSession, root: String, store: String): DataFrame =
-    mergeDeletes(read(spark, root, store), spark, root, store,
-      snapshot(spark, root))
+    mergedIn(spark, root, snapshot(spark, root), store)
 
   /** Time-travel [[readMerged]]: the data AND the delete set as of
     * manifest `m` — a delete is as time-travel-visible as a write.
     */
   def readMergedAt(spark: SparkSession, root: String, store: String, m: Long): DataFrame =
-    mergeDeletes(readAt(spark, root, store, m), spark, root, store,
-      snapshotAt(spark, root, m), Some(m))
+    mergedIn(spark, root, snapshotAt(spark, root, m), store)
 
-  private def mergeDeletes(data: DataFrame, spark: SparkSession, root: String,
-                           store: String, snap: Map[String, Long],
-                           at: Option[Long] = None): DataFrame =
-    snap.get(deletesStore(store)) match {
-      case None => data
-      case Some(_) =>
-        val del = at match {
-          case Some(m) => readAt(spark, root, deletesStore(store), m)
-          case None    => read(spark, root, deletesStore(store))
-        }
-        data.join(del, del.columns.toSeq, "left_anti")
-    }
+  private def deletesIn(spark: SparkSession, root: String, snap: Map[String, Long],
+                        store: String): Option[DataFrame] =
+    snap.get(deletesStore(store)).map(_ => readIn(spark, root, snap, deletesStore(store)))
+
+  /** Data minus delete set, both resolved from the ONE snapshot `snap`: a
+    * [[compactDeletes]] landing mid-read can never pair the pre-compaction
+    * data with the reset (empty) delete set and resurrect deleted rows.
+    */
+  private def mergedIn(spark: SparkSession, root: String, snap: Map[String, Long],
+                       store: String): DataFrame = {
+    val data = readIn(spark, root, snap, store)
+    deletesIn(spark, root, snap, store)
+      .fold(data)(del => data.join(del, del.columns.toSeq, "left_anti"))
+  }
 
   /** Fold the delete set into the data: rewrite the store as its merged
     * view and reset the delete set to empty, in ONE snapshot commit (a
     * reader time-traveling to any manifest still sees a consistent
     * data-minus-deletes pair). This is the maintenance pass that keeps the
     * read-time anti-join side broadcast-sized — run it when the delete set
-    * grows past broadcast scale or on a compaction schedule.
+    * grows past broadcast scale or on a compaction schedule. CAS-pinned
+    * (see [[rewritePinned]]) to the data and delete-set versions it read:
+    * a micro-batch committed mid-compaction makes this call throw instead
+    * of being overwritten by the stale compacted rows.
     */
   def compactDeletes(spark: SparkSession, root: String, store: String,
                      keep: Int = 2,
-                     stats: Map[String, Seq[String]] = Map.empty): Map[String, Long] = {
-    val snap = snapshot(spark, root)
-    require(snap.contains(deletesStore(store)),
-      s"compactDeletes: store '$store' has no delete set to fold in")
-    val emptyKeys = read(spark, root, deletesStore(store)).filter(lit(false))
-    commit(root, Map(
-      store                -> readMerged(spark, root, store),
-      deletesStore(store)  -> emptyKeys), keep, stats = stats)
+                     stats: Map[String, Seq[String]] = Map.empty): Map[String, Long] =
+    rewritePinned(spark, root, store, keep, stats) { (data, deletes) =>
+      val del = deletes().getOrElse(throw new IllegalArgumentException(
+        s"compactDeletes: store '$store' has no delete set to fold in"))
+      Map(store                -> data.join(del, del.columns.toSeq, "left_anti"),
+          deletesStore(store)  -> del.filter(lit(false)))
+    }
+
+  /** The one CAS-pinned rewrite behind [[compactDeletes]], [[optimize]]
+    * and `LayoutOps.optimizeZorder`: resolve `store`'s data (and, on
+    * demand, its delete set) from ONE snapshot, let `reshape` derive the
+    * writes from them, and publish through [[commitIf]] pinned to the
+    * version every written store had in that snapshot. A rewrite racing a data commit LOSES (throws
+    * [[java.util.ConcurrentModificationException]]; the caller re-runs
+    * over the fresh snapshot) rather than publishing a rewrite of stale
+    * data over the winner — rewrites that change no rows still change
+    * pointers.
+    */
+  private[graft] def rewritePinned(spark: SparkSession, root: String, store: String,
+                                   keep: Int, stats: Map[String, Seq[String]],
+                                   bloom: Map[String, Seq[String]] = Map.empty)(
+      reshape: (DataFrame, () => Option[DataFrame]) => Map[String, DataFrame]): Map[String, Long] = {
+    val snap   = snapshot(spark, root)
+    val writes = reshape(readIn(spark, root, snap, store), () => deletesIn(spark, root, snap, store))
+    commitIf(root, writes, writes.keys.map(s => s -> snap.get(s)).toMap, keep,
+      stats = stats, bloom = bloom)
   }
 
   /** Driver-side read of the one-row txn marker. The marker is a KB-sized
@@ -239,7 +273,7 @@ object MultiStore {
     * and costs one FS listing plus one footer/page read, at any scale.
     */
   private def readTxnMarker(spark: SparkSession, root: String, store: String, v: Long): Long = {
-    val (fs, dirP) = hfs(spark, s"${root.stripSuffix("/")}/$store/v=$v")
+    val (fs, dirP) = hfs(spark, versionDir(root, store, v))
     val parts = fs.listStatus(dirP).toSeq.map(_.getPath)
       .filter { p =>
         val n = p.getName
@@ -308,11 +342,9 @@ object MultiStore {
     * file — `file`, `min_<c>`/`max_<c>` per stats column, `n_rows`.
     * Present only for versions committed with `stats` naming the store.
     */
-  def fileStats(spark: SparkSession, root: String, store: String): DataFrame = {
-    val v = snapshot(spark, root).getOrElse(store,
-      throw new IllegalStateException(s"MultiStore at $root has no committed store '$store'"))
-    spark.read.parquet(s"${root.stripSuffix("/")}/$store/stats_v=$v")
-  }
+  def fileStats(spark: SparkSession, root: String, store: String): DataFrame =
+    spark.read.parquet(versionDir(root, store,
+      version(root, snapshot(spark, root), store), "stats_v"))
 
   /** Range read that opens ONLY the files whose `[min_c, max_c]` zone
     * intersects `[lo, hi]` — file skipping from commit-time stats, the
@@ -337,10 +369,9 @@ object MultiStore {
   def readPrunedRanges(spark: SparkSession, root: String, store: String,
                        ranges: Seq[(String, Column, Column)]): DataFrame = {
     require(ranges.nonEmpty, "readPrunedRanges: at least one range")
-    val v = snapshot(spark, root).getOrElse(store,
-      throw new IllegalStateException(s"MultiStore at $root has no committed store '$store'"))
-    val dir   = s"${root.stripSuffix("/")}/$store/v=$v"
-    val zones = spark.read.parquet(s"${root.stripSuffix("/")}/$store/stats_v=$v")
+    val v     = version(root, snapshot(spark, root), store)
+    val dir   = versionDir(root, store, v)
+    val zones = spark.read.parquet(versionDir(root, store, v, "stats_v"))
     val zonePred = ranges.map { case (c, lo, hi) =>
       col(s"max_$c") >= lo && col(s"min_$c") <= hi
     }.reduce(_ && _)
@@ -374,26 +405,21 @@ object MultiStore {
     * Old manifests still reference the fragmented version — time travel is
     * unaffected, and retention eventually sweeps it.
     *
-    * Runs through [[commitIf]] pinned to the version it read: an OPTIMIZE
-    * racing a data commit must LOSE (throw, caller re-runs over the fresh
-    * snapshot) rather than silently publish a rewrite of stale data over
-    * the winner — rewrites that change no rows still change pointers.
+    * CAS-pinned to the version it read ([[rewritePinned]]): an OPTIMIZE
+    * racing a data commit loses loudly.
     */
   def optimize(spark: SparkSession, root: String, store: String,
                targetFiles: Int, clusterBy: Seq[String] = Nil,
                stats: Seq[String] = Nil, bloom: Seq[String] = Nil,
                keep: Int = 2): Map[String, Long] = {
     require(targetFiles > 0, "optimize: targetFiles must be positive")
-    val v = snapshot(spark, root).getOrElse(store,
-      throw new IllegalStateException(s"MultiStore at $root has no committed store '$store'"))
-    val data = read(spark, root, store)
-    val shaped =
-      if (clusterBy.nonEmpty)
-        data.repartitionByRange(targetFiles, clusterBy.map(col): _*)
-      else data.repartition(targetFiles)
-    commitIf(root, Map(store -> shaped), Map(store -> Some(v)), keep,
+    rewritePinned(spark, root, store, keep,
       stats = if (stats.nonEmpty) Map(store -> stats) else Map.empty,
-      bloom = if (bloom.nonEmpty) Map(store -> bloom) else Map.empty)
+      bloom = if (bloom.nonEmpty) Map(store -> bloom) else Map.empty) { (data, _) =>
+      Map(store -> (
+        if (clusterBy.nonEmpty) data.repartitionByRange(targetFiles, clusterBy.map(col): _*)
+        else data.repartition(targetFiles)))
+    }
   }
 
   /** RESTORE (Delta's `RESTORE TABLE ... TO VERSION`): roll `store` back
@@ -415,19 +441,17 @@ object MultiStore {
     * Concurrency: last-writer-wins through the same manifest-name race as
     * [[commit]] — a concurrent commit landing first forces a re-read of
     * its snapshot, so the restore never silently rolls back pointers it
-    * merely carried forward (the doCommit lost-update lesson).
+    * merely carried forward (the lost-update rule of `publish`).
     */
   def restore(spark: SparkSession, root: String, store: String, m: Long,
-              keep: Int = 2, pruneGraceMs: Long = DefaultPruneGraceMs): Map[String, Long] = {
-    val (fs, rootP) = hfs(spark, root)
-    val target      = snapshotAt(spark, root, m) // validates m is retained
+              keep: Int = 2): Map[String, Long] = {
+    val target = snapshotAt(spark, root, m) // validates m is retained
     require(target.contains(store),
       s"MultiStore at $root: store '$store' absent at manifest m=$m — nothing to restore")
     val touched = Seq(store, deletesStore(store))
-    var attempts = 0
-    while (true) {
-      val baseNums = manifestNumbers(fs, rootP)
-      // Re-validate INSIDE the retry loop (time-of-check/time-of-use): a
+    val (fs, _) = hfs(spark, root)
+    publish(spark, root, keep, DefaultPruneGraceMs) { (baseNums, base) =>
+      // Re-validate on EVERY publish attempt (time-of-check/time-of-use): a
       // concurrent commit that won a race may have pruned manifest m — and
       // swept the target version dirs it alone protected — between our
       // snapshotAt above and this publish attempt. Publishing then would
@@ -438,30 +462,13 @@ object MultiStore {
           "during restore (a concurrent commit pruned it) — aborting")
       touched.foreach { s =>
         target.get(s).foreach { v =>
-          require(fs.exists(new org.apache.hadoop.fs.Path(rootP, s"$s/v=$v")),
+          require(fs.exists(new org.apache.hadoop.fs.Path(versionDir(root, s, v))),
             s"MultiStore at $root: restore target $s/v=$v was swept by a " +
               "concurrent prune — aborting")
         }
       }
-      val base     = baseNums.lastOption.map(readManifest(fs, rootP, _)).getOrElse(Map.empty[String, Long])
-      val snap     = (base -- touched) ++ touched.flatMap(s => target.get(s).map(s -> _))
-      val mNext    = baseNums.lastOption.getOrElse(-1L) + 1
-      val tmp = new org.apache.hadoop.fs.Path(rootP,
-        s".manifest_attempt_${mNext}_${attempts}_${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(snap.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }
-        .mkString("", "\n", "\n").getBytes("UTF-8"))
-      finally out.close()
-      if (AtomicFs.publish(fs, tmp, new org.apache.hadoop.fs.Path(rootP, ManifestPrefix + mNext))) {
-        prune(fs, rootP, root, keep, pruneGraceMs)
-        return snap
-      }
-      attempts += 1
-      if (attempts > 100)
-        throw new IllegalStateException(
-          s"MultiStore at $root: lost the manifest race $attempts times during restore")
+      (base -- touched) ++ touched.flatMap(s => target.get(s).map(s -> _))
     }
-    sys.error("unreachable")
   }
 
   /** The per-file Bloom sidecar of `store`'s live version: one row per
@@ -469,11 +476,9 @@ object MultiStore {
     * column, `n_rows`. Present only for versions committed with `bloom`
     * naming the store.
     */
-  def fileBlooms(spark: SparkSession, root: String, store: String): DataFrame = {
-    val v = snapshot(spark, root).getOrElse(store,
-      throw new IllegalStateException(s"MultiStore at $root has no committed store '$store'"))
-    spark.read.parquet(s"${root.stripSuffix("/")}/$store/bloom_v=$v")
-  }
+  def fileBlooms(spark: SparkSession, root: String, store: String): DataFrame =
+    spark.read.parquet(versionDir(root, store,
+      version(root, snapshot(spark, root), store), "bloom_v"))
 
   /** Equality (point-lookup) read that opens ONLY the files whose Bloom
     * sketch might contain `value` — the Delta "bloom filter index" path
@@ -503,9 +508,8 @@ object MultiStore {
     */
   def readPrunedEqMulti(spark: SparkSession, root: String, store: String,
                         c: String, values: Seq[Column]): Seq[DataFrame] = {
-    val v = snapshot(spark, root).getOrElse(store,
-      throw new IllegalStateException(s"MultiStore at $root has no committed store '$store'"))
-    val dir = s"${root.stripSuffix("/")}/$store/v=$v"
+    val v   = version(root, snapshot(spark, root), store)
+    val dir = versionDir(root, store, v)
     // hash each probe value through the SAME expression the commit-side
     // sketch hashed the column with (a one-row local-relation projection —
     // constant-folded, no cluster job). xxhash64 is TYPE-sensitive: an INT
@@ -519,7 +523,7 @@ object MultiStore {
         xxhash64(value.cast(storedType)).as(s"h$i")
       }: _*)
       .head()
-    val sidecar = spark.read.parquet(s"${root.stripSuffix("/")}/$store/bloom_v=$v")
+    val sidecar = spark.read.parquet(versionDir(root, store, v, "bloom_v"))
       .select(col("file"), col(s"bloom_$c")).collect()
     values.zipWithIndex.map { case (value, i) =>
       require(!hRow.isNullAt(i), s"readPrunedEq: value for '$c' must be a non-null literal")
@@ -566,7 +570,7 @@ object MultiStore {
              pruneGraceMs: Long = DefaultPruneGraceMs,
              stats: Map[String, Seq[String]] = Map.empty,
              bloom: Map[String, Seq[String]] = Map.empty): Map[String, Long] =
-    doCommit(root, writes, keep, pruneGraceMs, stats, bloom, expected = None)
+    doCommit(root, writes, keep, pruneGraceMs, stats, bloom, expected = Map.empty)
 
   /** Compare-and-swap commit — the conflict-DETECTING half a transaction
     * log adds over last-writer-wins: the commit publishes only if every
@@ -584,52 +588,33 @@ object MultiStore {
     */
   def commitIf(root: String, writes: Map[String, DataFrame],
                expected: Map[String, Option[Long]], keep: Int = 2,
-               pruneGraceMs: Long = DefaultPruneGraceMs,
                stats: Map[String, Seq[String]] = Map.empty,
                bloom: Map[String, Seq[String]] = Map.empty): Map[String, Long] =
-    doCommit(root, writes, keep, pruneGraceMs, stats, bloom, Some(expected))
+    doCommit(root, writes, keep, DefaultPruneGraceMs, stats, bloom, expected)
 
   private def doCommit(root: String, writes: Map[String, DataFrame], keep: Int,
                        pruneGraceMs: Long, stats: Map[String, Seq[String]],
                        bloom: Map[String, Seq[String]],
-                       expected: Option[Map[String, Option[Long]]]): Map[String, Long] = {
+                       expected: Map[String, Option[Long]]): Map[String, Long] = {
     require(writes.nonEmpty, "MultiStore.commit: no stores to write")
-    val spark       = writes.head._2.sparkSession
-    val (fs, rootP) = hfs(spark, root)
-    if (!fs.exists(rootP)) fs.mkdirs(rootP)
-
-    var attempts = 0
-    var done: Option[Map[String, Long]] = None
-    while (done.isEmpty) {
-      // Base snapshot AND the manifest number it came from are read in ONE
-      // listing: the publish below targets exactly base-manifest + 1, so a
-      // concurrent commit landing in between makes our rename FAIL (name
-      // taken) instead of us publishing a stale base on top of it. Reading
-      // the number again at publish time is the lost-update hole the
-      // concurrent-deleteWhere race test caught: a loser that re-lists
-      // after the winner's publish gets a FRESH number, renames cleanly,
-      // and silently rolls back every pointer the winner advanced that
-      // this commit merely carried forward.
-      val baseNums = manifestNumbers(fs, rootP)
-      val base     = baseNums.lastOption.map(readManifest(fs, rootP, _)).getOrElse(Map.empty[String, Long])
+    val spark = writes.head._2.sparkSession
+    publish(spark, root, keep, pruneGraceMs) { (_, base) =>
       // 0. CAS validation — checked against every refreshed snapshot, so a
       // conflict that lands during a manifest-race retry is caught too;
       // the publish-time rename keeps the check authoritative (a conflict
       // arriving between here and the rename forces a retry, which
       // re-validates before trying again)
-      expected.foreach { exp =>
-        exp.foreach { case (store, want) =>
-          val cur = base.get(store)
-          if (cur != want)
-            throw new java.util.ConcurrentModificationException(
-              s"MultiStore at $root: store '$store' is at version " +
-                s"${cur.fold("<absent>")(_.toString)}, expected " +
-                s"${want.fold("<absent>")(_.toString)} — a concurrent commit won; " +
-                "re-derive writes from the fresh snapshot and retry")
-        }
+      expected.foreach { case (store, want) =>
+        val cur = base.get(store)
+        if (cur != want)
+          throw new java.util.ConcurrentModificationException(
+            s"MultiStore at $root: store '$store' is at version " +
+              s"${cur.fold("<absent>")(_.toString)}, expected " +
+              s"${want.fold("<absent>")(_.toString)} — a concurrent commit won; " +
+              "re-derive writes from the fresh snapshot and retry")
       }
       // 1. data first: claim + write a fresh immutable version per store
-      val newVersions = writes.map { case (store, df) =>
+      base ++ writes.map { case (store, df) =>
         val storeRoot = s"${root.stripSuffix("/")}/$store"
         val (sfs, sp) = hfs(spark, storeRoot)
         if (!sfs.exists(sp)) sfs.mkdirs(sp)
@@ -643,43 +628,68 @@ object MultiStore {
         // race test caught before this went through O_EXCL.
         while (!AtomicFs.claim(sfs, new org.apache.hadoop.fs.Path(sp, s"_graft_claim_v=$next")))
           next += 1
-        df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$storeRoot/v=$next")
+        df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(versionDir(root, store, next))
         stats.get(store).foreach { cols =>
-          val written = spark.read.parquet(s"$storeRoot/v=$next")
           val aggs = cols.flatMap(c =>
             Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))) :+
             count(lit(1)).as("n_rows")
-          written.groupBy(input_file_name().as("file"))
-            .agg(aggs.head, aggs.tail: _*)
-            .coalesce(1) // one row per data FILE — KB-sized at any scale
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$storeRoot/stats_v=$next")
+          writeSidecar(spark, root, store, next, "stats_v", aggs)
         }
         bloom.get(store).foreach { cols =>
-          val written = spark.read.parquet(s"$storeRoot/v=$next")
           val aggs = cols.map(c =>
             GraftColumnBridge.column(new BloomFilterAggregate(
               GraftColumnBridge.expression(xxhash64(col(c))),
               Literal(BloomExpectedItems), Literal(BloomNumBits))
               .toAggregateExpression())
               .as(s"bloom_$c")) :+ count(lit(1)).as("n_rows")
-          written.groupBy(input_file_name().as("file"))
-            .agg(aggs.head, aggs.tail: _*)
-            .coalesce(1) // one (file, sketch...) row per data FILE
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$storeRoot/bloom_v=$next")
+          writeSidecar(spark, root, store, next, "bloom_v", aggs)
         }
         store -> next
       }
-      // 2. one atomic publish: tmp file renamed into the next manifest name
-      val snap = base ++ newVersions
-      val m    = baseNums.lastOption.getOrElse(-1L) + 1
+    }
+  }
+
+  /** One row of `aggs` per data FILE of `store`'s freshly written version
+    * `v` — KB-sized at any scale — saved as its `kind` sidecar.
+    */
+  private def writeSidecar(spark: SparkSession, root: String, store: String, v: Long,
+                           kind: String, aggs: Seq[Column]): Unit =
+    spark.read.parquet(versionDir(root, store, v))
+      .groupBy(input_file_name().as("file"))
+      .agg(aggs.head, aggs.tail: _*)
+      .coalesce(1)
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(versionDir(root, store, v, kind))
+
+  /** The one manifest publish, shared by every commit verb and
+    * [[restore]]. Each attempt lists the manifests ONCE and hands the
+    * numbers and the head snapshot to `next`, which validates (it may
+    * throw) and returns the snapshot to publish — a commit writes its data
+    * versions first. The publish targets exactly head + 1: a concurrent
+    * commit landing in between makes the install FAIL (name taken) and the
+    * attempt repeats over the refreshed head, instead of publishing a
+    * stale base on top of it. Re-reading the number at publish time is the
+    * lost-update hole the concurrent-deleteWhere race test caught: a loser
+    * that re-lists after the winner's publish gets a FRESH number,
+    * installs cleanly, and silently rolls back every pointer the winner
+    * advanced that this commit merely carried forward. A win prunes.
+    */
+  private def publish(spark: SparkSession, root: String, keep: Int, pruneGraceMs: Long)(
+      next: (Seq[Long], Map[String, Long]) => Map[String, Long]): Map[String, Long] = {
+    val (fs, rootP) = hfs(spark, root)
+    if (!fs.exists(rootP)) fs.mkdirs(rootP)
+    var attempts = 0
+    while (true) {
+      val baseNums = manifestNumbers(fs, rootP)
+      val base     = baseNums.lastOption.map(readManifest(fs, rootP, _)).getOrElse(Map.empty[String, Long])
+      val snap     = next(baseNums, base)
+      val m        = baseNums.lastOption.getOrElse(-1L) + 1
       // tmp name must be unique PER COMMITTER, not just per (m, attempt):
       // two committers racing the same manifest number would share one tmp
       // file — the winner's publish consumes it out from under the loser
       val tmp = new org.apache.hadoop.fs.Path(rootP,
         s".manifest_attempt_${m}_${attempts}_${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-      val out  = fs.create(tmp, true)
+      val out = fs.create(tmp, true)
       try out.write(snap.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }
         .mkString("", "\n", "\n").getBytes("UTF-8"))
       finally out.close()
@@ -692,16 +702,15 @@ object MultiStore {
       // whole retry/CAS story rests on has a hole exactly under contention.
       if (AtomicFs.publish(fs, tmp, new org.apache.hadoop.fs.Path(rootP, ManifestPrefix + m))) {
         prune(fs, rootP, root, keep, pruneGraceMs)
-        done = Some(snap)
-      } else {
-        // a concurrent committer took manifest m: retry over its snapshot
-        attempts += 1
-        if (attempts > 100)
-          throw new IllegalStateException(
-            s"MultiStore at $root: lost the manifest race $attempts times — live contention")
+        return snap
       }
+      // a concurrent committer took manifest m: retry over its snapshot
+      attempts += 1
+      if (attempts > 100)
+        throw new IllegalStateException(
+          s"MultiStore at $root: lost the manifest race $attempts times — live contention")
     }
-    done.get
+    sys.error("unreachable")
   }
 
   /** A retrying committer re-claims a FRESH version on every attempt, so

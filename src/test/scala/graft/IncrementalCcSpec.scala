@@ -90,7 +90,7 @@ class IncrementalCcSpec extends SparkSpec {
 
     val base = Seq((1L, 2L), (4L, 5L), (7L, 8L)).toDF("src", "dst")
     val dir  = Files.createTempDirectory("cc-labels").toString + "/labels"
-    graft.sources.VersionedStore.write(GraphOps.connectedComponents(base, spark), dir)
+    graft.sources.MultiStore.commit(dir, Map("labels" -> GraphOps.connectedComponents(base, spark)))
 
     val input = MemoryStream[(Long, Long)]
     val query = GraphOps.streamingLabelMaintenance(
@@ -103,7 +103,7 @@ class IncrementalCcSpec extends SparkSpec {
       query.processAllAvailable()
     } finally query.stop()
 
-    val got  = ccMap(graft.sources.VersionedStore.read(spark, dir))
+    val got  = ccMap(graft.sources.MultiStore.read(spark, dir, "labels"))
     val full = ccMap(GraphOps.connectedComponents(
       base.unionByName(Seq((2L, 4L), (5L, 7L), (9L, 10L)).toDF("src", "dst")), spark))
     assert(got.keySet === full.keySet)
