@@ -1,9 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min, xxhash64}
+import org.apache.spark.sql.types.StructType
 
 /** Multi-table snapshot commits over immutable parquet store versions —
   * the repository's ONLY versioned-store protocol: every self-maintained
@@ -45,6 +47,11 @@ import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, mi
   * are carried forward in the manifest by reference (a text line, not a
   * data copy). Manifest files are bytes-sized; data versions are pruned
   * only when no retained manifest references them.
+  *
+  * Metadata stays on the driver: the manifest, each opened version's
+  * schema (one footer, see `open`), the txn marker and the Bloom probe
+  * hash are resolved without a Spark job. Only row data (scans, sidecar
+  * collects, writes) runs as Spark jobs.
   */
 object MultiStore {
 
@@ -107,9 +114,42 @@ object MultiStore {
     snap.getOrElse(store,
       throw new IllegalStateException(s"MultiStore at $root has no committed store '$store'"))
 
+  /** The data files of a version dir: every entry but the `_`- and
+    * `.`-prefixed ones the writer leaves beside them (`_SUCCESS`, `.crc`
+    * checksums), the rule Spark's file index applies. Listing a file
+    * yields the file itself.
+    */
+  private def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
+                        p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    fs.listStatus(p).toSeq.filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }
+
+  /** The schema of the parquet data at `path` (a version dir or one data
+    * file), read from one footer on the driver. All files of a version
+    * come from one write, so one footer speaks for all of them.
+    */
+  private def footerSchema(spark: SparkSession, path: String): StructType = {
+    val (fs, p) = hfs(spark, path)
+    val file = dataFiles(fs, p).headOption.getOrElse(throw new IllegalStateException(
+      s"MultiStore: $path holds no parquet data file"))
+    GraftParquetBridge.schema(spark, spark.sessionState.newHadoopConf(), file)
+  }
+
+  /** Every parquet open in this module: data versions, delete sets,
+    * sidecars and pruned file lists. The schema comes from the first
+    * path's footer and is handed to the reader, so Spark runs no
+    * schema-inference job. Every dir this module writes holds a footer
+    * (an empty write still leaves one schema-only file), so there is no
+    * fallback to inference.
+    */
+  private def open(spark: SparkSession, paths: String*): DataFrame =
+    spark.read.schema(footerSchema(spark, paths.head)).parquet(paths: _*)
+
   private def readIn(spark: SparkSession, root: String, snap: Map[String, Long],
                      store: String): DataFrame =
-    spark.read.parquet(versionDir(root, store, version(root, snap, store)))
+    open(spark, versionDir(root, store, version(root, snap, store)))
 
   /** Read one store at the live snapshot. */
   def read(spark: SparkSession, root: String, store: String): DataFrame =
@@ -274,11 +314,7 @@ object MultiStore {
     */
   private def readTxnMarker(spark: SparkSession, root: String, store: String, v: Long): Long = {
     val (fs, dirP) = hfs(spark, versionDir(root, store, v))
-    val parts = fs.listStatus(dirP).toSeq.map(_.getPath)
-      .filter { p =>
-        val n = p.getName
-        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-      }
+    val parts = dataFiles(fs, dirP).map(_.getPath)
     val conf = spark.sessionState.newHadoopConf()
     val ids = parts.flatMap { p =>
       val reader = org.apache.parquet.hadoop.ParquetReader
@@ -306,6 +342,13 @@ object MultiStore {
     * read, so two racing sinks with the same sinkId cannot both apply one
     * batch — the CAS loser re-reads and sees the batch already applied.
     *
+    * A write derived from its own store (the `read ∪ batch` sink) is also
+    * pinned to the version it read ([[readVersions]]): if a rewrite such as
+    * [[compactDeletes]] moved that store meanwhile, the call throws
+    * [[java.util.ConcurrentModificationException]] at once, and the caller
+    * re-reads and rebuilds the batch. Without the pin the stale rows would
+    * overwrite the rewrite, and rows it had folded out would come back.
+    *
     * Batch ids must be monotonically increasing per sinkId (foreachBatch's
     * contract). Returns true iff this call applied the batch.
     */
@@ -316,16 +359,21 @@ object MultiStore {
     val spark    = writes.head._2.sparkSession
     val txnStore = sinkId + ".txn"
     import spark.implicits._
+    lazy val pins = readVersions(spark, root, writes)
     var attempts = 0
     while (true) {
       val snap       = snapshot(spark, root)
       val txnVersion = snap.get(txnStore)
       val lastId     = txnVersion.map(readTxnMarker(spark, root, txnStore, _))
       if (lastId.exists(_ >= batchId)) return false // already applied
+      // a moved pinned store fails every retry alike: surface it now
+      pins.foreach { case (s, v) =>
+        if (!snap.get(s).contains(v)) throw casConflict(root, s, snap.get(s), Some(v))
+      }
       try {
         commitIf(root,
           writes + (txnStore -> Seq(batchId).toDF("batch_id")),
-          Map(txnStore -> txnVersion), keep, stats = stats)
+          pins.map { case (s, v) => s -> Some(v) } + (txnStore -> txnVersion), keep, stats = stats)
         return true
       } catch {
         case e: java.util.ConcurrentModificationException =>
@@ -336,6 +384,26 @@ object MultiStore {
     sys.error("unreachable")
   }
 
+  /** The version each write read of its own store: the `v=<n>` of the
+    * frame's input files under `root/<store>/`, the newest if it scans
+    * several. A write that scans none of its store's files (a blind write,
+    * or a checkpointed frame) gets no entry.
+    */
+  private def readVersions(spark: SparkSession, root: String,
+                           writes: Map[String, DataFrame]): Map[String, Long] = {
+    val (fs, rootP) = hfs(spark, root)
+    val qualified   = fs.makeQualified(rootP)
+    writes.flatMap { case (store, df) =>
+      val storeP = new org.apache.hadoop.fs.Path(qualified, store)
+      df.inputFiles.toSeq
+        .map(f => new org.apache.hadoop.fs.Path(new java.net.URI(f)).getParent)
+        .collect { case d if d.getParent == storeP && d.getName.startsWith("v=") =>
+          d.getName.stripPrefix("v=").toLong
+        }
+        .maxOption.map(store -> _)
+    }
+  }
+
   // ---- stats-driven file pruning (zone maps) -------------------------------
 
   /** The per-file zone map of `store`'s live version: one row per data
@@ -343,7 +411,7 @@ object MultiStore {
     * Present only for versions committed with `stats` naming the store.
     */
   def fileStats(spark: SparkSession, root: String, store: String): DataFrame =
-    spark.read.parquet(versionDir(root, store,
+    open(spark, versionDir(root, store,
       version(root, snapshot(spark, root), store), "stats_v"))
 
   /** Range read that opens ONLY the files whose `[min_c, max_c]` zone
@@ -371,7 +439,7 @@ object MultiStore {
     require(ranges.nonEmpty, "readPrunedRanges: at least one range")
     val v     = version(root, snapshot(spark, root), store)
     val dir   = versionDir(root, store, v)
-    val zones = spark.read.parquet(versionDir(root, store, v, "stats_v"))
+    val zones = open(spark, versionDir(root, store, v, "stats_v"))
     val zonePred = ranges.map { case (c, lo, hi) =>
       col(s"max_$c") >= lo && col(s"min_$c") <= hi
     }.reduce(_ && _)
@@ -379,9 +447,9 @@ object MultiStore {
     val residual = ranges.map { case (c, lo, hi) => col(c) >= lo && col(c) <= hi }
       .reduce(_ && _)
     if (files.isEmpty)
-      spark.read.parquet(dir).filter(lit(false))
+      open(spark, dir).filter(lit(false))
     else
-      spark.read.parquet(files.toIndexedSeq: _*).filter(residual)
+      open(spark, files.toIndexedSeq: _*).filter(residual)
   }
 
   // ---- OPTIMIZE (bin-packing compaction) + bloom point-lookup pruning ----
@@ -477,7 +545,7 @@ object MultiStore {
     * naming the store.
     */
   def fileBlooms(spark: SparkSession, root: String, store: String): DataFrame =
-    spark.read.parquet(versionDir(root, store,
+    open(spark, versionDir(root, store,
       version(root, snapshot(spark, root), store), "bloom_v"))
 
   /** Equality (point-lookup) read that opens ONLY the files whose Bloom
@@ -511,19 +579,21 @@ object MultiStore {
     val v   = version(root, snapshot(spark, root), store)
     val dir = versionDir(root, store, v)
     // hash each probe value through the SAME expression the commit-side
-    // sketch hashed the column with (a one-row local-relation projection —
-    // constant-folded, no cluster job). xxhash64 is TYPE-sensitive: an INT
-    // 7 and a BIGINT 7 hash differently, and a mistyped probe would give
-    // bloom false NEGATIVES (files never opened — unrecoverable by the
-    // residual filter). Cast the probes to the stored column's type first.
-    val schema     = spark.read.parquet(dir).schema
+    // sketch hashed the column with, projected over a one-row LOCAL
+    // relation: Catalyst folds the projection and the limit into a local
+    // result, so `head` runs no Spark job (a range relation would run
+    // one). xxhash64 is TYPE-sensitive: an INT 7 and a BIGINT 7 hash
+    // differently, and a mistyped probe would give bloom false NEGATIVES
+    // (files never opened — unrecoverable by the residual filter). Cast
+    // the probes to the stored column's type first.
+    val schema     = footerSchema(spark, dir)
     val storedType = schema(c).dataType
-    val hRow = spark.range(1)
+    val hRow = spark.createDataFrame(java.util.Collections.singletonList(Row.empty), new StructType())
       .select(values.zipWithIndex.map { case (value, i) =>
         xxhash64(value.cast(storedType)).as(s"h$i")
       }: _*)
       .head()
-    val sidecar = spark.read.parquet(versionDir(root, store, v, "bloom_v"))
+    val sidecar = open(spark, versionDir(root, store, v, "bloom_v"))
       .select(col("file"), col(s"bloom_$c")).collect()
     values.zipWithIndex.map { case (value, i) =>
       require(!hRow.isNullAt(i), s"readPrunedEq: value for '$c' must be a non-null literal")
@@ -540,9 +610,8 @@ object MultiStore {
       if (files.isEmpty) {
         // a genuinely file-less empty frame (schema only), so callers
         // counting inputFiles see the zero files the sketch check opened
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      } else spark.read.parquet(files.toIndexedSeq: _*).filter(col(c) === value)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+      } else open(spark, files.toIndexedSeq: _*).filter(col(c) === value)
     }
   }
 
@@ -592,6 +661,14 @@ object MultiStore {
                bloom: Map[String, Seq[String]] = Map.empty): Map[String, Long] =
     doCommit(root, writes, keep, DefaultPruneGraceMs, stats, bloom, expected)
 
+  private def casConflict(root: String, store: String, cur: Option[Long],
+                          want: Option[Long]) =
+    new java.util.ConcurrentModificationException(
+      s"MultiStore at $root: store '$store' is at version " +
+        s"${cur.fold("<absent>")(_.toString)}, expected " +
+        s"${want.fold("<absent>")(_.toString)} — a concurrent commit won; " +
+        "re-derive writes from the fresh snapshot and retry")
+
   private def doCommit(root: String, writes: Map[String, DataFrame], keep: Int,
                        pruneGraceMs: Long, stats: Map[String, Seq[String]],
                        bloom: Map[String, Seq[String]],
@@ -606,12 +683,7 @@ object MultiStore {
       // re-validates before trying again)
       expected.foreach { case (store, want) =>
         val cur = base.get(store)
-        if (cur != want)
-          throw new java.util.ConcurrentModificationException(
-            s"MultiStore at $root: store '$store' is at version " +
-              s"${cur.fold("<absent>")(_.toString)}, expected " +
-              s"${want.fold("<absent>")(_.toString)} — a concurrent commit won; " +
-              "re-derive writes from the fresh snapshot and retry")
+        if (cur != want) throw casConflict(root, store, cur, want)
       }
       // 1. data first: claim + write a fresh immutable version per store
       base ++ writes.map { case (store, df) =>
@@ -654,7 +726,7 @@ object MultiStore {
     */
   private def writeSidecar(spark: SparkSession, root: String, store: String, v: Long,
                            kind: String, aggs: Seq[Column]): Unit =
-    spark.read.parquet(versionDir(root, store, v))
+    open(spark, versionDir(root, store, v))
       .groupBy(input_file_name().as("file"))
       .agg(aggs.head, aggs.tail: _*)
       .coalesce(1)

@@ -752,4 +752,120 @@ class MultiStoreSpec extends SparkSpec {
     assert(MultiStore.readMerged(spark, r, "docs").as[Long].collect().toSet == Set(-1L, -2L))
     assert(!MultiStore.commitBatch(r, "ingest", 0L, Map("docs" -> batch)))
   }
+
+  test("a sink's read-derived commitBatch is pinned to the version it read: a compactDeletes in between throws, deleted rows never come back") {
+    import org.apache.spark.sql.functions.col
+    val r = root()
+    MultiStore.commit(r, Map("docs" -> spark.range(0, 100).toDF("id")))
+    MultiStore.deleteWhere(spark, r, "docs", col("id") < 10L, Seq("id"))
+    // the sink reads docs v=0, deleted rows included (`read` is the raw data)
+    val batch = Seq(-1L, -2L).toDF("id")
+    val stale = MultiStore.read(spark, r, "docs").unionByName(batch)
+    // the compaction folds the deletes into docs v=1 and resets the delete set
+    MultiStore.compactDeletes(spark, r, "docs")
+    val history = MultiStore.manifests(spark, r)
+    intercept[java.util.ConcurrentModificationException] {
+      MultiStore.commitBatch(r, "ingest", 0L, Map("docs" -> stale))
+    }
+    assert(MultiStore.manifests(spark, r) == history, "the stale batch published a manifest")
+    // the caller re-reads and rebuilds the batch, which applies once
+    val fresh = MultiStore.read(spark, r, "docs").unionByName(batch)
+    assert(MultiStore.commitBatch(r, "ingest", 0L, Map("docs" -> fresh)))
+    assert(!MultiStore.commitBatch(r, "ingest", 0L, Map("docs" -> fresh)))
+    assert(MultiStore.readMerged(spark, r, "docs").as[Long].collect().toSet ==
+      (10L until 100L).toSet ++ Set(-1L, -2L))
+    // a blind write (no input files of its store) stays unpinned
+    assert(MultiStore.commitBatch(r, "ingest", 1L, Map("docs" -> Seq(5L).toDF("id"))))
+  }
+
+  test("opening a version runs no Spark job: schema, manifest and probe hash resolve on the driver") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.functions.col
+    val r = root()
+    MultiStore.commit(r, Map("t" -> spark.range(0, 200).toDF("id").repartition(4)),
+      bloom = Map("t" -> Seq("id")))
+    MultiStore.deleteWhere(spark, r, "t", col("id") < 5L, Seq("id"))
+    val m  = MultiStore.manifests(spark, r).last
+    val sc = spark.sparkContext
+    // count only this thread's jobs: they carry its job group
+    val group = s"multistore-jobs-${java.util.UUID.randomUUID()}"
+    val jobs  = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    def jobsOf(body: => Any): Int = {
+      org.apache.spark.GraftListenerBridge.flush(sc)
+      jobs.set(0)
+      sc.setJobGroup(group, "MultiStoreSpec job count")
+      try body finally sc.clearJobGroup()
+      org.apache.spark.GraftListenerBridge.flush(sc)
+      jobs.get()
+    }
+    sc.addSparkListener(listener)
+    try {
+      // frames are only built, never collected
+      assert(jobsOf(MultiStore.read(spark, r, "t")) == 0)
+      assert(jobsOf(MultiStore.readAt(spark, r, "t", m)) == 0)
+      assert(jobsOf(MultiStore.readMerged(spark, r, "t")) == 0)
+      assert(jobsOf(MultiStore.readMergedAt(spark, r, "t", m)) == 0)
+      // the Bloom lookup's one job is its sidecar collect
+      assert(jobsOf(MultiStore.readPrunedEq(spark, r, "t", "id", lit(42L))) == 1)
+      // the counter does see jobs
+      assert(jobsOf(MultiStore.read(spark, r, "t").collect()) >= 1)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a footer-read schema equals Spark's inferred one for every type, the empty reset delete set included") {
+    import java.math.BigDecimal
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("name", StringType, nullable = false),
+      StructField("ts", TimestampType),
+      StructField("ntz", TimestampNTZType),
+      StructField("day", DateType),
+      StructField("amount", DecimalType(18, 2)),
+      StructField("wide", DecimalType(38, 10), nullable = false),
+      StructField("blob", BinaryType),
+      StructField("tags", ArrayType(StringType, containsNull = false)),
+      StructField("props", MapType(StringType, IntegerType, valueContainsNull = true)),
+      StructField("geo", StructType(Seq(
+        StructField("lat", DoubleType, nullable = false),
+        StructField("tags", ArrayType(ShortType)))))))
+    val rows = Seq(
+      Row(1L, "a", java.sql.Timestamp.valueOf("2024-01-02 03:04:05.123456"),
+        java.time.LocalDateTime.parse("2024-01-02T03:04:05"), java.sql.Date.valueOf("2024-01-02"),
+        new BigDecimal("12.34"), new BigDecimal("1234567890.0123456789"), Array[Byte](1, 2, 3),
+        Seq("x", "y"), Map("k" -> 1, "n" -> null), Row(1.5, Seq(1.toShort, null))),
+      Row(2L, "b", null, null, null, null, new BigDecimal("0E-10"), null, Seq.empty[String],
+        null, Row(-2.5, null)),
+      Row(3L, "c", java.sql.Timestamp.valueOf("1970-01-01 00:00:00"), null, null,
+        new BigDecimal("-0.01"), new BigDecimal("-1.5"), Array.emptyByteArray, Seq("z"),
+        Map.empty[String, Int], null))
+    val r = root()
+    MultiStore.commit(r, Map("t" -> spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      .repartition(2)))
+    MultiStore.deleteWhere(spark, r, "t", col("id") === 2L, Seq("id"))
+    MultiStore.compactDeletes(spark, r, "t")
+    val snap = MultiStore.snapshot(spark, r)
+    // the compacted data and the EMPTY delete set compactDeletes resets to
+    assert(MultiStore.read(spark, r, "t.deletes").count() == 0L)
+    Seq("t", "t.deletes").foreach { store =>
+      val dir      = s"$r/$store/v=${snap(store)}"
+      val got      = MultiStore.read(spark, r, store)
+      val inferred = spark.read.parquet(dir)
+      assert(got.schema == inferred.schema, s"$store: footer schema differs from inference")
+      assert(got.orderBy("id").collect().toSeq == inferred.orderBy("id").collect().toSeq)
+    }
+    val v0 = MultiStore.readAt(spark, r, "t", MultiStore.manifests(spark, r).head)
+    assert(v0.schema == spark.read.parquet(s"$r/t/v=0").schema)
+    assert(v0.orderBy("id").collect().toSeq == spark.read.parquet(s"$r/t/v=0").orderBy("id").collect().toSeq)
+    assert(v0.orderBy("id").collect().map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L))
+    assert(MultiStore.readMerged(spark, r, "t").orderBy("id").collect().map(_.getLong(0)).toSeq ==
+      Seq(1L, 3L))
+  }
 }
