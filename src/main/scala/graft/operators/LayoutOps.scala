@@ -222,9 +222,10 @@ object LayoutOps {
     * with this file's Morton machinery: read the live
     * version, rank-scale each dimension by its measured min/max (one
     * 1-row aggregate), interleave, range-cluster into `targetFiles`
-    * internally-sorted files, and commit with fresh zone maps on EVERY
-    * z-dimension. A `clusterBy` (lexicographic range) layout prunes on
-    * its first column and not the rest; the z-layout's files are bounded
+    * internally-sorted files, and commit. Each file's footer then holds
+    * tight min/max on EVERY z-dimension. A `clusterBy` (lexicographic
+    * range) layout prunes on its first column and not the rest; the
+    * z-layout's files are bounded
     * 2-D tiles, so [[graft.sources.MultiStore.readPrunedRanges]] skips on
     * ALL dimensions at once. CAS-pinned to the version it read — an
     * OPTIMIZE racing a data commit loses loudly (the m14 contract).
@@ -233,8 +234,7 @@ object LayoutOps {
                      store: String, targetFiles: Int, zCols: Seq[String],
                      bits: Int, keep: Int = 2): Map[String, Long] = {
     require(zCols.size >= 2, "optimizeZorder: z-order needs at least two dimensions")
-    graft.sources.MultiStore.rewritePinned(spark, root, store, keep,
-      stats = Map(store -> zCols)) { (data, _) =>
+    graft.sources.MultiStore.rewritePinned(spark, root, store, keep) { (data, _) =>
       val aggs = zCols.flatMap(c =>
         Seq(min(col(c)).cast("long").as(s"mn_$c"), max(col(c)).cast("long").as(s"mx_$c")))
       val mm = data.agg(aggs.head, aggs.tail: _*).head()
@@ -274,11 +274,10 @@ object LayoutOps {
     val spark = t.spark
     import graft.sources.MultiStore
     SnapshotQueries.withTempStore("graft-zorderopt") { root =>
-      // hash-scattered ingest: stats committed too — the zone maps exist,
-      // they are just USELESS on this layout, which is the point
+      // hash-scattered ingest: every footer's min/max exists, it is just
+      // USELESS on this layout, which is the point
       MultiStore.commit(root, Map("docs" ->
-        t.documents.select("doc_id", "lang", "n_chars").repartition(16, col("doc_id"))),
-        stats = Map("docs" -> Seq("doc_id", "n_chars")))
+        t.documents.select("doc_id", "lang", "n_chars").repartition(16, col("doc_id"))))
       // box bounds from max(doc_id)+1, mirroring the oracle's mx CTE
       val nRows = MultiStore.read(spark, root, "docs")
         .agg(max(col("doc_id"))).head().getLong(0) + 1L

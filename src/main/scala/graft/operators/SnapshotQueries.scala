@@ -121,9 +121,9 @@ object SnapshotQueries {
     }
   }
 
-  /** m12: stats-driven file pruning — a range-clustered commit records
-    * per-file min/max zone maps; the range read opens only intersecting
-    * files. The result must equal the plain filter (pruning is a superset
+  /** m12: footer-driven file pruning — a range-clustered commit leaves
+    * each file's footer with a tight min/max per column; the range read
+    * opens only intersecting files. The result must equal the plain filter (pruning is a superset
     * + residual), which is exactly what the oracle checks; the spec
     * (MultiStoreSpec) additionally asserts the file-skip actually
     * happened — fewer files opened than committed.
@@ -141,8 +141,7 @@ object SnapshotQueries {
     import graft.sources.MultiStore
     withTempStore("graft-statsprune") { root =>
       MultiStore.commit(root,
-        Map("orders" -> t.orders.repartitionByRange(8, col("o_orderdate"))),
-        stats = Map("orders" -> Seq("o_orderdate")))
+        Map("orders" -> t.orders.repartitionByRange(8, col("o_orderdate"))))
       MultiStore.readPruned(spark, root, "orders", "o_orderdate",
           lit("1997-01-01").cast("timestamp"), lit("1997-06-30").cast("timestamp"))
         .groupBy(col("o_orderpriority").as("priority"))
@@ -245,10 +244,11 @@ object SnapshotQueries {
   /** m14: OPTIMIZE — small-file bin-packing compaction as a snapshot
     * commit. Every run executes the real machinery: a deliberately
     * fragmented ingest (32 files), then [[graft.sources.MultiStore.optimize]]
-    * rewriting the SAME rows into 4 range-clustered files with fresh zone
-    * maps, then (a) a driver-side guard that the live layout really shrank,
-    * (b) a zone-pruned range read over the OPTIMIZED layout feeding the
-    * result (a broken rewrite or broken re-stats breaks the hash), and
+    * rewriting the SAME rows into 4 range-clustered files whose footers
+    * hold tight min/max, then (a) a driver-side guard that the live layout
+    * really shrank, (b) a footer-pruned range read over the OPTIMIZED layout
+    * feeding the result (a broken rewrite or broken pruning breaks the
+    * hash), and
     * (c) a time-travel count back to the fragmented manifest proving
     * OPTIMIZE never rewrote history — the compaction is a new version, not
     * a mutation. DuckDB replays the end state, a pure function of the
@@ -272,14 +272,14 @@ object SnapshotQueries {
       val preOpt       = MultiStore.manifests(spark, root).last
       val nFilesBefore = MultiStore.read(spark, root, "docs").inputFiles.length
       MultiStore.optimize(spark, root, "docs", targetFiles = 4,
-        clusterBy = Seq("doc_id"), stats = Seq("doc_id"))
+        clusterBy = Seq("doc_id"))
       val nFilesAfter = MultiStore.read(spark, root, "docs").inputFiles.length
       require(nFilesAfter < nFilesBefore,
         s"optimize did not compact: $nFilesBefore -> $nFilesAfter files")
       // the fragmented version is still a readable snapshot (time travel)
       val before = MultiStore.readAt(spark, root, "docs", preOpt)
         .agg(count(lit(1)).as("n_before"))
-      // serve a range query through the optimized layout's fresh zone maps
+      // serve a range query pruned by the optimized layout's footers
       MultiStore.readPruned(spark, root, "docs", "doc_id", lit(100L), lit(399L))
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("chars"))
@@ -289,13 +289,14 @@ object SnapshotQueries {
   }
 
   /** m15: Bloom point-lookup pruning — the file-skipping story for
-    * HIGH-CARDINALITY equality predicates, where min/max zones are useless
+    * HIGH-CARDINALITY equality predicates, where min/max ranges are useless
     * by construction: the store is hash-distributed (every file's doc_id
-    * range spans the whole corpus), so a range-zone read would open every
-    * file, but each doc_id lands in ~one file's Bloom sketch. Every run
-    * commits the store with per-file Bloom sidecars, runs five real point
-    * lookups through [[graft.sources.MultiStore.readPrunedEq]], and guards
-    * driver-side that the sketches actually skipped (≤2 files opened per
+    * range spans the whole corpus), so a min/max-pruned read would open
+    * every file, but each doc_id lands in ~one file's Bloom filter. Every
+    * run commits the store with a native parquet Bloom filter on doc_id in
+    * each file, runs five real point lookups through
+    * [[graft.sources.MultiStore.readPrunedEqMulti]], and guards driver-side
+    * that the Bloom filters actually skipped (≤2 files opened per
     * lookup out of 16). False positives are stripped by the residual
     * equality filter, which is exactly what the oracle checks.
     */
@@ -312,10 +313,9 @@ object SnapshotQueries {
           .repartition(16, col("doc_id") * 2654435761L % 1000)), // hash-scattered
         bloom = Map("docs" -> Seq("doc_id")))
       val keys = Seq(7L, 113L, 229L, 331L, 433L)
-      // batched point-lookup API (r15): snapshot/schema/sidecar resolved
-      // once for the key set, per-key pruning and the opened-files guard
-      // unchanged — five single-key calls re-collected the identical
-      // sidecar five times (~0.24 s/key of pure metadata re-reads).
+      // batched point-lookup API: snapshot, listing and footers read once
+      // for the key set, per-key pruning and the opened-files guard
+      // unchanged
       val lookups = MultiStore
         .readPrunedEqMulti(spark, root, "docs", "doc_id", keys.map(lit(_)))
         .zip(keys).map { case (hit, k) =>
@@ -592,8 +592,8 @@ object SnapshotQueries {
     * per-batch tables with a single `flags` table (the fold reads
     * O(accumulated) once, on the maintenance cadence, never inside the
     * ingest loop); (3) m14's OPTIMIZE verb on the folded store —
-    * bin-packed to 2 range-clustered files with fresh zone-map sidecars,
-    * guarded in-row; (4) time travel back to the pre-fold manifest proving
+    * bin-packed to 2 range-clustered files whose footers hold tight
+    * min/max, guarded in-row; (4) time travel back to the pre-fold manifest proving
     * the fragmented per-batch view is still a readable snapshot (its row
     * count rides the output as `n_rows`); (5) the final answer served
     * through `readPruned` over the compacted layout, so the oracle checks
@@ -629,9 +629,9 @@ object SnapshotQueries {
       val preM  = MultiStore.manifests(spark, root).last
       // (2) the fold: N per-batch tables -> one table, one CAS commit
       MultiStore.commit(root, Map("flags" -> frag), keep = 8)
-      // (3) m14's OPTIMIZE on the folded store: bin-pack + fresh zone maps
+      // (3) m14's OPTIMIZE on the folded store: bin-pack, range-clustered
       MultiStore.optimize(spark, root, "flags", targetFiles = 2,
-        clusterBy = Seq("doc_id"), stats = Seq("doc_id"), keep = 8)
+        clusterBy = Seq("doc_id"), keep = 8)
       val nAfter = MultiStore.read(spark, root, "flags").inputFiles.length
       require(nAfter <= 2 && nAfter < nFrag,
         s"compaction did not compact: $nFrag fragmented files -> $nAfter")
@@ -641,7 +641,7 @@ object SnapshotQueries {
       val travel = batchStores
         .map(MultiStore.readAt(spark, root, _, preM)).reduce(_ unionByName _)
         .agg(count(lit(1)).as("n_rows"))
-      // (5) serve the range query through the compacted layout's zone maps
+      // (5) serve the range query pruned by the compacted layout's footers
       MultiStore.readPruned(spark, root, "flags", "doc_id", lit(100L), lit(399L))
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("chars"))

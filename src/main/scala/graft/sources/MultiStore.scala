@@ -1,10 +1,12 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
-import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min, xxhash64}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.sources
 import org.apache.spark.sql.types.StructType
 
 /** Multi-table snapshot commits over immutable parquet store versions —
@@ -48,10 +50,12 @@ import org.apache.spark.sql.types.StructType
   * data copy). Manifest files are bytes-sized; data versions are pruned
   * only when no retained manifest references them.
   *
-  * Metadata stays on the driver: the manifest, each opened version's
-  * schema (one footer, see `open`), the txn marker and the Bloom probe
-  * hash are resolved without a Spark job. Only row data (scans, sidecar
-  * collects, writes) runs as Spark jobs.
+  * Metadata stays on the driver, in the parquet footers the data files
+  * already carry: the manifest, each opened version's schema, the row
+  * count of a delete set, the file pruning of range and Bloom reads (footer
+  * min/max and native Bloom filters, see [[readPrunedRanges]]) and the txn
+  * marker resolve without a Spark job, and no sidecar repeats what a
+  * footer holds. Only row data (scans, writes) runs as Spark jobs.
   */
 object MultiStore {
 
@@ -99,16 +103,14 @@ object MultiStore {
       .getOrElse(Map.empty)
   }
 
-  /** `root/<store>/<kind>=<v>`: a data version (`v`) or one of its
-    * zone-map (`stats_v`) / Bloom (`bloom_v`) sidecars.
-    */
-  private def versionDir(root: String, store: String, v: Long, kind: String = "v"): String =
-    s"${root.stripSuffix("/")}/$store/$kind=$v"
+  /** `root/<store>/v=<v>`: the data files of one store version. */
+  private def versionDir(root: String, store: String, v: Long): String =
+    s"${root.stripSuffix("/")}/$store/v=$v"
 
   /** The one live-version lookup: `store`'s version in an already-read
     * snapshot. Every reader and rewriter resolves through a snapshot it
-    * read ONCE, so the data, delete set and sidecars it opens all come
-    * from the same manifest.
+    * read ONCE, so the data and delete set it opens come from the same
+    * manifest.
     */
   private def version(root: String, snap: Map[String, Long], store: String): Long =
     snap.getOrElse(store,
@@ -126,26 +128,41 @@ object MultiStore {
       st.isFile && !n.startsWith("_") && !n.startsWith(".")
     }
 
-  /** The schema of the parquet data at `path` (a version dir or one data
-    * file), read from one footer on the driver. All files of a version
-    * come from one write, so one footer speaks for all of them.
+  /** The one driver-side footer reader: lists the data files of the
+    * version dir `dir` once and opens each at most once, lazily and in
+    * listing order, handing `f` the file, its Spark schema and its open
+    * reader. Every file opens under ONE Hadoop conf, carried by
+    * `HadoopReadOptions`: the `ParquetFileReader.open(InputFile)` overload
+    * without options builds a fresh `Configuration` per file, which costs
+    * more than the footer read itself.
     */
-  private def footerSchema(spark: SparkSession, path: String): StructType = {
-    val (fs, p) = hfs(spark, path)
-    val file = dataFiles(fs, p).headOption.getOrElse(throw new IllegalStateException(
-      s"MultiStore: $path holds no parquet data file"))
-    GraftParquetBridge.schema(spark, spark.sessionState.newHadoopConf(), file)
+  private def footers[T](spark: SparkSession, dir: String)(
+      f: (org.apache.hadoop.fs.FileStatus, StructType, ParquetFileReader) => T): Iterator[T] = {
+    val (fs, p)  = hfs(spark, dir)
+    val conf     = spark.sessionState.newHadoopConf()
+    val options  = HadoopReadOptions.builder(conf).build()
+    dataFiles(fs, p).iterator.map { st =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf), options)
+      try f(st, GraftParquetBridge.schema(spark, st.getPath, reader), reader)
+      finally reader.close()
+    }
   }
 
-  /** Every parquet open in this module: data versions, delete sets,
-    * sidecars and pruned file lists. The schema comes from the first
-    * path's footer and is handed to the reader, so Spark runs no
-    * schema-inference job. Every dir this module writes holds a footer
-    * (an empty write still leaves one schema-only file), so there is no
-    * fallback to inference.
+  /** Every parquet scan in this module: `paths` read under a footer-read
+    * `schema`, so Spark runs no schema-inference job.
     */
-  private def open(spark: SparkSession, paths: String*): DataFrame =
-    spark.read.schema(footerSchema(spark, paths.head)).parquet(paths: _*)
+  private def scan(spark: SparkSession, schema: StructType, paths: String*): DataFrame =
+    spark.read.schema(schema).parquet(paths: _*)
+
+  /** A version dir read whole, its schema from the first footer. All files
+    * of a version come from one write, so one footer speaks for all of
+    * them. Every dir this module writes holds a footer (an empty write
+    * still leaves one schema-only file), so there is no fallback to
+    * inference.
+    */
+  private def open(spark: SparkSession, dir: String): DataFrame =
+    scan(spark, footers(spark, dir)((_, schema, _) => schema).nextOption().getOrElse(
+      throw new IllegalStateException(s"MultiStore: $dir holds no parquet data file")), dir)
 
   private def readIn(spark: SparkSession, root: String, snap: Map[String, Long],
                      store: String): DataFrame =
@@ -255,12 +272,22 @@ object MultiStore {
   /** Data minus delete set, both resolved from the ONE snapshot `snap`: a
     * [[compactDeletes]] landing mid-read can never pair the pre-compaction
     * data with the reset (empty) delete set and resurrect deleted rows.
+    * The anti-join is planned only when the delete set's footers count a
+    * row, so the empty set [[compactDeletes]] resets to costs a footer read
+    * instead of a broadcast job.
     */
   private def mergedIn(spark: SparkSession, root: String, snap: Map[String, Long],
                        store: String): DataFrame = {
     val data = readIn(spark, root, snap, store)
-    deletesIn(spark, root, snap, store)
-      .fold(data)(del => data.join(del, del.columns.toSeq, "left_anti"))
+    snap.get(deletesStore(store)).fold(data) { v =>
+      val dir   = versionDir(root, deletesStore(store), v)
+      val files = footers(spark, dir)((_, schema, reader) => (schema, reader.getRecordCount)).toSeq
+      if (files.map(_._2).sum == 0L) data
+      else {
+        val del = scan(spark, files.head._1, dir)
+        data.join(del, del.columns.toSeq, "left_anti")
+      }
+    }
   }
 
   /** Fold the delete set into the data: rewrite the store as its merged
@@ -271,12 +298,13 @@ object MultiStore {
     * grows past broadcast scale or on a compaction schedule. CAS-pinned
     * (see [[rewritePinned]]) to the data and delete-set versions it read:
     * a micro-batch committed mid-compaction makes this call throw instead
-    * of being overwritten by the stale compacted rows.
+    * of being overwritten by the stale compacted rows. `stats` writes
+    * nothing, as in [[commit]].
     */
   def compactDeletes(spark: SparkSession, root: String, store: String,
                      keep: Int = 2,
                      stats: Map[String, Seq[String]] = Map.empty): Map[String, Long] =
-    rewritePinned(spark, root, store, keep, stats) { (data, deletes) =>
+    rewritePinned(spark, root, store, keep) { (data, deletes) =>
       val del = deletes().getOrElse(throw new IllegalArgumentException(
         s"compactDeletes: store '$store' has no delete set to fold in"))
       Map(store                -> data.join(del, del.columns.toSeq, "left_anti"),
@@ -294,13 +322,11 @@ object MultiStore {
     * pointers.
     */
   private[graft] def rewritePinned(spark: SparkSession, root: String, store: String,
-                                   keep: Int, stats: Map[String, Seq[String]],
-                                   bloom: Map[String, Seq[String]] = Map.empty)(
+                                   keep: Int, bloom: Map[String, Seq[String]] = Map.empty)(
       reshape: (DataFrame, () => Option[DataFrame]) => Map[String, DataFrame]): Map[String, Long] = {
     val snap   = snapshot(spark, root)
     val writes = reshape(readIn(spark, root, snap, store), () => deletesIn(spark, root, snap, store))
-    commitIf(root, writes, writes.keys.map(s => s -> snap.get(s)).toMap, keep,
-      stats = stats, bloom = bloom)
+    commitIf(root, writes, writes.keys.map(s => s -> snap.get(s)).toMap, keep, bloom = bloom)
   }
 
   /** Driver-side read of the one-row txn marker. The marker is a KB-sized
@@ -350,7 +376,8 @@ object MultiStore {
     * overwrite the rewrite, and rows it had folded out would come back.
     *
     * Batch ids must be monotonically increasing per sinkId (foreachBatch's
-    * contract). Returns true iff this call applied the batch.
+    * contract). Returns true iff this call applied the batch. `stats`
+    * writes nothing, as in [[commit]].
     */
   def commitBatch(root: String, sinkId: String, batchId: Long,
                   writes: Map[String, DataFrame], keep: Int = 2,
@@ -373,7 +400,7 @@ object MultiStore {
       try {
         commitIf(root,
           writes + (txnStore -> Seq(batchId).toDF("batch_id")),
-          pins.map { case (s, v) => s -> Some(v) } + (txnStore -> txnVersion), keep, stats = stats)
+          pins.map { case (s, v) => s -> Some(v) } + (txnStore -> txnVersion), keep)
         return true
       } catch {
         case e: java.util.ConcurrentModificationException =>
@@ -404,73 +431,119 @@ object MultiStore {
     }
   }
 
-  // ---- stats-driven file pruning (zone maps) -------------------------------
+  // ---- file pruning from footers: ranges and Bloom point lookups -----------
 
-  /** The per-file zone map of `store`'s live version: one row per data
-    * file — `file`, `min_<c>`/`max_<c>` per stats column, `n_rows`.
-    * Present only for versions committed with `stats` naming the store.
-    */
-  def fileStats(spark: SparkSession, root: String, store: String): DataFrame =
-    open(spark, versionDir(root, store,
-      version(root, snapshot(spark, root), store), "stats_v"))
-
-  /** Range read that opens ONLY the files whose `[min_c, max_c]` zone
-    * intersects `[lo, hi]` — file skipping from commit-time stats, the
-    * scan path a lakehouse query planner takes before parquet footers are
-    * even opened. The residual predicate is still applied (zones are a
-    * superset); on a range-clustered table (writer used
-    * `repartitionByRange(c)`) the skip rate approaches the selectivity.
-    * The file list is driver-side metadata: one row per FILE, bounded by
-    * layout, never by row count.
+  /** Range read that opens ONLY the files whose footer min/max for `c` may
+    * intersect `[lo, hi]`: file skipping from the statistics every parquet
+    * footer already records for every column, so it works on any version,
+    * however it was committed. The residual predicate is still applied
+    * (footer ranges are a superset); on a range-clustered table (writer
+    * used `repartitionByRange(c)`) the skip rate approaches the
+    * selectivity. The file list is resolved on the driver (see
+    * [[readPrunedRanges]]): building the frame runs no Spark job, and
+    * collecting it runs one.
     */
   def readPruned(spark: SparkSession, root: String, store: String,
                  c: String, lo: Column, hi: Column): DataFrame =
     readPrunedRanges(spark, root, store, Seq((c, lo, hi)))
 
-  /** Conjunctive multi-column zone pruning: a file survives only if EVERY
-    * range intersects its zone. Pairs naturally with a Z-ordered writer
-    * (`LayoutOps.clusterByZ` interleaves the dimensions, so each file's
-    * per-column min/max boxes are tight in all of them simultaneously) —
-    * the zone map turns the Z-layout into genuine multi-dimensional file
-    * skipping, the Delta/Iceberg `ZORDER BY` + stats combination.
+  /** Conjunctive multi-column range pruning: a file survives only if EVERY
+    * range may intersect its footer min/max. Pairs naturally with a
+    * Z-ordered writer (`LayoutOps.clusterByZ` interleaves the dimensions,
+    * so each file's per-column min/max boxes are tight in all of them
+    * simultaneously) — the footers turn the Z-layout into genuine
+    * multi-dimensional file skipping, the Delta/Iceberg `ZORDER BY` + stats
+    * combination.
+    *
+    * The pruning is Spark's own row-group test, run on the driver: the
+    * predicate goes through the optimizer and Spark's Catalyst-to-parquet
+    * translation (`ParquetFilters`), and a file is kept if parquet's
+    * `RowGroupFilter` keeps at least one of its row groups
+    * ([[GraftParquetBridge.mayMatch]]). Spark's reader applies the same
+    * test to every row group inside the scan task, so pruning only drops
+    * files whose row groups the scan would skip anyway. A predicate or type
+    * the translation does not cover keeps every file. A read that keeps no
+    * file is a schema-only local frame with no input files, which collects
+    * without a Spark job.
     */
   def readPrunedRanges(spark: SparkSession, root: String, store: String,
                        ranges: Seq[(String, Column, Column)]): DataFrame = {
     require(ranges.nonEmpty, "readPrunedRanges: at least one range")
-    val v     = version(root, snapshot(spark, root), store)
-    val dir   = versionDir(root, store, v)
-    val zones = open(spark, versionDir(root, store, v, "stats_v"))
-    val zonePred = ranges.map { case (c, lo, hi) =>
-      col(s"max_$c") >= lo && col(s"min_$c") <= hi
-    }.reduce(_ && _)
-    val files = zones.filter(zonePred).select("file").collect().map(_.getString(0))
-    val residual = ranges.map { case (c, lo, hi) => col(c) >= lo && col(c) <= hi }
-      .reduce(_ && _)
-    if (files.isEmpty)
-      open(spark, dir).filter(lit(false))
-    else
-      open(spark, files.toIndexedSeq: _*).filter(residual)
+    val pred = ranges.map { case (c, lo, hi) => col(c) >= lo && col(c) <= hi }.reduce(_ && _)
+    prunedScans(spark, root, store, Seq(pred)).head
   }
 
-  // ---- OPTIMIZE (bin-packing compaction) + bloom point-lookup pruning ----
-
-  /** Per-file Bloom sketch sizing for `commit(bloom = ...)` sidecars:
-    * 2^20 bits = 128 KiB per (file, column) sketch, ~1e-4 false-positive
-    * rate at 64 K distinct keys per file. A sidecar row per data file —
-    * metadata-sized at any corpus scale (a 100 TB store at 1 GB/file is
-    * ~100 K sidecar rows ≈ 13 GB of sketches, read file-list-wise, never
-    * joined to data).
+  /** Equality (point-lookup) read that opens ONLY the files whose footer
+    * min/max and native parquet Bloom filter for `c` may contain `value` —
+    * the Delta "bloom filter index" path for high-cardinality columns where
+    * min/max ranges are useless (a hash-distributed id intersects every
+    * file's range, but lands in ~one file's Bloom filter). The filters are
+    * the ones [[commit]] writes for its `bloom` columns; a file without one
+    * is pruned by min/max alone. The probe is cast as Spark's filter casts
+    * it, so an INT probe against a BIGINT column hashes as a BIGINT. False
+    * positives are stripped by the residual equality filter, so the result
+    * equals the plain filter by construction; a NULL probe matches no row.
+    * Pruning runs as in [[readPrunedRanges]]: no Spark job to build, one to
+    * collect a hit, none to collect a miss.
     */
-  val BloomNumBits: Long       = 1L << 20
-  val BloomExpectedItems: Long = BloomNumBits / 16
+  def readPrunedEq(spark: SparkSession, root: String, store: String,
+                   c: String, value: Column): DataFrame =
+    readPrunedEqMulti(spark, root, store, c, Seq(value)).head
+
+  /** Batched point lookup: [[readPrunedEq]] for several probe values of
+    * the SAME column against the SAME live version, returning one pruned
+    * frame per value (order preserved). The snapshot, the listing and each
+    * file's footer are read ONCE for the whole batch instead of once per
+    * key. Per-key semantics are unchanged: each returned frame opens only
+    * the files that may contain its value, with the residual equality
+    * filter on top.
+    */
+  def readPrunedEqMulti(spark: SparkSession, root: String, store: String,
+                        c: String, values: Seq[Column]): Seq[DataFrame] =
+    prunedScans(spark, root, store, values.map(col(c) === _))
+
+  /** One pruned scan per predicate over `store`'s live version, from one
+    * pass over its footers. Each predicate is translated once per schema
+    * (one optimizer run; all files of a version come from one write, so
+    * once) and tested against every file.
+    */
+  private def prunedScans(spark: SparkSession, root: String, store: String,
+                          preds: Seq[Column]): Seq[DataFrame] = {
+    val dir    = versionDir(root, store, version(root, snapshot(spark, root), store))
+    val pushed = scala.collection.mutable.Map.empty[StructType, Seq[Option[Seq[sources.Filter]]]]
+    val files  = footers(spark, dir) { (st, schema, reader) =>
+      val filters = pushed.getOrElseUpdate(schema,
+        preds.map(GraftParquetBridge.pushedFilters(spark, schema, _)))
+      (st.getPath.toString, schema,
+        filters.map(_.exists(GraftParquetBridge.mayMatch(spark, reader, _))))
+    }.toSeq
+    val schema = files.headOption.map(_._2).getOrElse(
+      throw new IllegalStateException(s"MultiStore: $dir holds no parquet data file"))
+    preds.zipWithIndex.map { case (pred, i) =>
+      files.collect { case (f, _, keep) if keep(i) => f } match {
+        case Seq() => spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+        case kept  => scan(spark, schema, kept: _*).filter(pred)
+      }
+    }
+  }
+
+  // ---- OPTIMIZE (bin-packing compaction) -----------------------------------
+
+  /** Expected distinct values per file that sizes the native parquet Bloom
+    * filter [[commit]] writes for each `bloom` column (the writer option
+    * `parquet.bloom.filter.expected.ndv`): at parquet's default 1%
+    * false-positive rate, a 128 KiB filter per (file, column).
+    */
+  val BloomExpectedItems: Long = 1L << 16
 
   /** OPTIMIZE — the small-file bin-packing compaction every lakehouse
     * needs once streaming/batch ingest has fragmented a store: rewrite the
     * live data version's ROWS (unchanged) into `targetFiles` files,
-    * range-clustered by `clusterBy` when given (so zone maps stay tight —
-    * the `ZORDER`-lite layout half of the Delta OPTIMIZE verb), and commit
-    * the rewrite as a NEW version with fresh `stats`/`bloom` sidecars.
-    * Old manifests still reference the fragmented version — time travel is
+    * range-clustered by `clusterBy` when given (so footer min/max ranges
+    * stay tight — the `ZORDER`-lite layout half of the Delta OPTIMIZE
+    * verb), and commit the rewrite as a NEW version with Bloom filters on
+    * the `bloom` columns. `stats` writes nothing, as in [[commit]]. Old
+    * manifests still reference the fragmented version — time travel is
     * unaffected, and retention eventually sweeps it.
     *
     * CAS-pinned to the version it read ([[rewritePinned]]): an OPTIMIZE
@@ -482,7 +555,6 @@ object MultiStore {
                keep: Int = 2): Map[String, Long] = {
     require(targetFiles > 0, "optimize: targetFiles must be positive")
     rewritePinned(spark, root, store, keep,
-      stats = if (stats.nonEmpty) Map(store -> stats) else Map.empty,
       bloom = if (bloom.nonEmpty) Map(store -> bloom) else Map.empty) { (data, _) =>
       Map(store -> (
         if (clusterBy.nonEmpty) data.repartitionByRange(targetFiles, clusterBy.map(col): _*)
@@ -539,107 +611,25 @@ object MultiStore {
     }
   }
 
-  /** The per-file Bloom sidecar of `store`'s live version: one row per
-    * data file — `file`, `bloom_<c>` (serialized sketch) per bloom
-    * column, `n_rows`. Present only for versions committed with `bloom`
-    * naming the store.
-    */
-  def fileBlooms(spark: SparkSession, root: String, store: String): DataFrame =
-    open(spark, versionDir(root, store,
-      version(root, snapshot(spark, root), store), "bloom_v"))
-
-  /** Equality (point-lookup) read that opens ONLY the files whose Bloom
-    * sketch might contain `value` — the Delta "bloom filter index" path
-    * for high-cardinality columns where min/max zones are useless (a
-    * hash-distributed id intersects every file's range, but lands in ~one
-    * file's sketch). The sketch check runs on the DRIVER over the per-file
-    * sidecar rows (one row per file, bounded by layout) using the same
-    * Catalyst [[BloomFilterMightContain]] the scan-side runtime filter
-    * uses; false positives are stripped by the residual equality filter,
-    * so the result equals the plain filter by construction.
-    */
-  def readPrunedEq(spark: SparkSession, root: String, store: String,
-                   c: String, value: Column): DataFrame =
-    readPrunedEqMulti(spark, root, store, c, Seq(value)).head
-
-  /** Batched point lookup: [[readPrunedEq]] for several probe values of
-    * the SAME column against the SAME live version, returning one pruned
-    * frame per value (order preserved). The snapshot resolution, data-dir
-    * schema read, probe hashing, and the per-file Bloom sidecar collect
-    * are paid ONCE for the whole batch instead of once per key — the
-    * sidecar is KB-per-file metadata, but each re-read was a full driver
-    * job (r15 measurement: m15's five single-key lookups spent ~1.5 s, of
-    * which ~1.2 s was five repeats of identical sidecar/schema work; guide
-    * §1.2 "don't compute things you throw away"). Per-key semantics are
-    * UNCHANGED: each returned frame opens only the files whose sketch
-    * might contain its value, with the residual equality filter on top.
-    */
-  def readPrunedEqMulti(spark: SparkSession, root: String, store: String,
-                        c: String, values: Seq[Column]): Seq[DataFrame] = {
-    val v   = version(root, snapshot(spark, root), store)
-    val dir = versionDir(root, store, v)
-    // hash each probe value through the SAME expression the commit-side
-    // sketch hashed the column with, projected over a one-row LOCAL
-    // relation: Catalyst folds the projection and the limit into a local
-    // result, so `head` runs no Spark job (a range relation would run
-    // one). xxhash64 is TYPE-sensitive: an INT 7 and a BIGINT 7 hash
-    // differently, and a mistyped probe would give bloom false NEGATIVES
-    // (files never opened — unrecoverable by the residual filter). Cast
-    // the probes to the stored column's type first.
-    val schema     = footerSchema(spark, dir)
-    val storedType = schema(c).dataType
-    val hRow = spark.createDataFrame(java.util.Collections.singletonList(Row.empty), new StructType())
-      .select(values.zipWithIndex.map { case (value, i) =>
-        xxhash64(value.cast(storedType)).as(s"h$i")
-      }: _*)
-      .head()
-    val sidecar = open(spark, versionDir(root, store, v, "bloom_v"))
-      .select(col("file"), col(s"bloom_$c")).collect()
-    values.zipWithIndex.map { case (value, i) =>
-      require(!hRow.isNullAt(i), s"readPrunedEq: value for '$c' must be a non-null literal")
-      val h = Literal(hRow.getLong(i))
-      val files = sidecar
-        .filter { r =>
-          val sketch = r.getAs[Array[Byte]](1)
-          sketch != null &&
-            BloomFilterMightContain(
-              Literal(sketch, org.apache.spark.sql.types.BinaryType), h)
-              .eval(null).asInstanceOf[Boolean]
-        }
-        .map(_.getString(0))
-      if (files.isEmpty) {
-        // a genuinely file-less empty frame (schema only), so callers
-        // counting inputFiles see the zero files the sketch check opened
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      } else open(spark, files.toIndexedSeq: _*).filter(col(c) === value)
-    }
-  }
-
   /** Commit `writes` as ONE snapshot: every data version lands first (each
     * in a fresh claimed dir, never touching live data), then a single
     * rename publishes the manifest that names them all plus every
     * unchanged store carried forward. Returns the committed snapshot.
     *
-    * `stats` names, per store, the columns to zone-map: after the data
-    * lands, one extra aggregation pass over the written files records each
-    * file's per-column min/max (plus its row count) in a `stats_v=<n>`
-    * parquet sidecar NEXT TO the version dir — a sibling, not a child,
-    * because Spark's scan planner skips underscore/dot-prefixed paths, and
-    * a sidecar inside the version dir would be readable only through a
-    * warned-but-tolerated hidden-path read. The sidecar lives and dies
-    * with its version (prune sweeps them together). [[readPruned]]
-    * consults it to open only the files whose range intersects a
-    * predicate — the Delta/Iceberg file-skipping story: at 100 TB a
-    * date-range query over a range-clustered table touches the manifest
-    * stats (KB) and the few matching files, not every footer of every
-    * file. Stats are computed before the manifest publish, so a crash
-    * mid-commit never publishes a stats-less version.
+    * `bloom` names, per store, the columns to give a native parquet Bloom
+    * filter (writer options `parquet.bloom.filter.enabled#<c>` and
+    * `parquet.bloom.filter.expected.ndv#<c>`, sized by
+    * [[BloomExpectedItems]]), stored in each data file beside its footer,
+    * where [[readPrunedEq]] reads it. `stats` writes nothing: every parquet
+    * footer already records min/max for every column, which is what
+    * [[readPrunedRanges]] prunes by. A commit writes its data files and
+    * the manifest, and no sidecar.
     */
   def commit(root: String, writes: Map[String, DataFrame], keep: Int = 2,
              pruneGraceMs: Long = DefaultPruneGraceMs,
              stats: Map[String, Seq[String]] = Map.empty,
              bloom: Map[String, Seq[String]] = Map.empty): Map[String, Long] =
-    doCommit(root, writes, keep, pruneGraceMs, stats, bloom, expected = Map.empty)
+    doCommit(root, writes, keep, pruneGraceMs, bloom, expected = Map.empty)
 
   /** Compare-and-swap commit — the conflict-DETECTING half a transaction
     * log adds over last-writer-wins: the commit publishes only if every
@@ -657,9 +647,8 @@ object MultiStore {
     */
   def commitIf(root: String, writes: Map[String, DataFrame],
                expected: Map[String, Option[Long]], keep: Int = 2,
-               stats: Map[String, Seq[String]] = Map.empty,
                bloom: Map[String, Seq[String]] = Map.empty): Map[String, Long] =
-    doCommit(root, writes, keep, DefaultPruneGraceMs, stats, bloom, expected)
+    doCommit(root, writes, keep, DefaultPruneGraceMs, bloom, expected)
 
   private def casConflict(root: String, store: String, cur: Option[Long],
                           want: Option[Long]) =
@@ -670,8 +659,7 @@ object MultiStore {
         "re-derive writes from the fresh snapshot and retry")
 
   private def doCommit(root: String, writes: Map[String, DataFrame], keep: Int,
-                       pruneGraceMs: Long, stats: Map[String, Seq[String]],
-                       bloom: Map[String, Seq[String]],
+                       pruneGraceMs: Long, bloom: Map[String, Seq[String]],
                        expected: Map[String, Option[Long]]): Map[String, Long] = {
     require(writes.nonEmpty, "MultiStore.commit: no stores to write")
     val spark = writes.head._2.sparkSession
@@ -700,38 +688,16 @@ object MultiStore {
         // race test caught before this went through O_EXCL.
         while (!AtomicFs.claim(sfs, new org.apache.hadoop.fs.Path(sp, s"_graft_claim_v=$next")))
           next += 1
-        df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(versionDir(root, store, next))
-        stats.get(store).foreach { cols =>
-          val aggs = cols.flatMap(c =>
-            Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))) :+
-            count(lit(1)).as("n_rows")
-          writeSidecar(spark, root, store, next, "stats_v", aggs)
-        }
-        bloom.get(store).foreach { cols =>
-          val aggs = cols.map(c =>
-            GraftColumnBridge.column(new BloomFilterAggregate(
-              GraftColumnBridge.expression(xxhash64(col(c))),
-              Literal(BloomExpectedItems), Literal(BloomNumBits))
-              .toAggregateExpression())
-              .as(s"bloom_$c")) :+ count(lit(1)).as("n_rows")
-          writeSidecar(spark, root, store, next, "bloom_v", aggs)
-        }
+        bloom.getOrElse(store, Nil)
+          .foldLeft(df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)) { (w, c) =>
+            w.option(s"parquet.bloom.filter.enabled#$c", "true")
+              .option(s"parquet.bloom.filter.expected.ndv#$c", BloomExpectedItems)
+          }
+          .parquet(versionDir(root, store, next))
         store -> next
       }
     }
   }
-
-  /** One row of `aggs` per data FILE of `store`'s freshly written version
-    * `v` — KB-sized at any scale — saved as its `kind` sidecar.
-    */
-  private def writeSidecar(spark: SparkSession, root: String, store: String, v: Long,
-                           kind: String, aggs: Seq[Column]): Unit =
-    open(spark, versionDir(root, store, v))
-      .groupBy(input_file_name().as("file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(versionDir(root, store, v, kind))
 
   /** The one manifest publish, shared by every commit verb and
     * [[restore]]. Each attempt lists the manifests ONCE and hands the
@@ -849,20 +815,7 @@ object MultiStore {
               fs.delete(entry.getPath, true)
               val claim = new org.apache.hadoop.fs.Path(st.getPath, s"_graft_claim_v=$v")
               if (fs.exists(claim)) fs.delete(claim, false)
-              // the zone-map/bloom sidecars live and die with their version
-              Seq(s"stats_v=$v", s"bloom_v=$v").foreach { side =>
-                val p = new org.apache.hadoop.fs.Path(st.getPath, side)
-                if (fs.exists(p)) fs.delete(p, true)
-              }
             }
-          } else if (name.startsWith("stats_v=") || name.startsWith("bloom_v=")) {
-            // sidecar whose data dir is already gone (e.g. a committer
-            // crashed between stats write and data write ordering, or an
-            // earlier prune predates sidecar-aware sweeping)
-            val v = name.dropWhile(_ != '=').tail.toLong
-            if (sweepable(v, entry.getModificationTime) &&
-                !fs.exists(new org.apache.hadoop.fs.Path(st.getPath, s"v=$v")))
-              fs.delete(entry.getPath, true)
           } else if (name.startsWith("_graft_claim_v=")) {
             // claim with no data dir: a committer died between claim and
             // write — same rules before reclaiming the name

@@ -201,14 +201,13 @@ class MultiStoreSpec extends SparkSpec {
     MultiStore.commit(r, Map("t" -> data.repartition(16)))
     val preOpt = MultiStore.manifests(spark, r).last
     assert(MultiStore.read(spark, r, "t").inputFiles.length >= 8)
-    MultiStore.optimize(spark, r, "t", targetFiles = 2,
-      clusterBy = Seq("id"), stats = Seq("id"))
+    MultiStore.optimize(spark, r, "t", targetFiles = 2, clusterBy = Seq("id"))
     val after = MultiStore.read(spark, r, "t")
     assert(after.inputFiles.length <= 2)
     // same rows, new layout
     assert(after.as[(Long, Long)].collect().toSet ==
       data.as[(Long, Long)].collect().toSet)
-    // fresh zone maps serve a pruned read over the clustered layout
+    // the rewritten footers serve a pruned read over the clustered layout
     val pruned = MultiStore.readPruned(spark, r, "t", "id", lit(0L), lit(99L))
     assert(pruned.inputFiles.length == 1)
     assert(pruned.count() == 100L)
@@ -235,7 +234,7 @@ class MultiStoreSpec extends SparkSpec {
     assert(MultiStore.read(spark, r, "t").count() == 200L)
   }
 
-  test("bloom sidecar: point lookups open only might-contain files; misses open none") {
+  test("bloom filter: point lookups open only might-contain files; misses open none") {
     val r = root()
     // hash-scattered layout: every file's id RANGE spans the corpus, so
     // zone pruning cannot skip — exactly the case the bloom index exists for
@@ -255,11 +254,10 @@ class MultiStoreSpec extends SparkSpec {
     // a probe whose LITERAL type differs from the stored column (INT 250
     // vs BIGINT id) must still hit: xxhash64 is type-sensitive, and an
     // uncast probe would bloom-false-NEGATIVE — zero files opened, rows
-    // silently lost with no residual-filter recovery
+    // silently lost with no residual-filter recovery — so the probe is cast
+    // as Spark's own filter casts it
     val intProbe = MultiStore.readPrunedEq(spark, r, "t", "id", lit(250))
     assert(intProbe.as[Long].collect().toSeq == Seq(250L))
-    // sidecar shape: one row per data file
-    assert(MultiStore.fileBlooms(spark, r, "t").count() == total.toLong)
   }
 
   test("readPrunedEqMulti equals per-key readPrunedEq: same files opened, same rows") {
@@ -432,10 +430,8 @@ class MultiStoreSpec extends SparkSpec {
       .withColumn("payload", concat(lit("row"), col("id")))
       .repartitionByRange(8, col("id"))
     MultiStore.commit(r, Map("t" -> data), stats = Map("t" -> Seq("id")))
-    val zones = MultiStore.fileStats(spark, r, "t")
-    val nFiles = zones.count()
-    assert(nFiles == 8L, s"expected 8 zone rows, got $nFiles")
-    assert(zones.columns.toSet == Set("file", "min_id", "max_id", "n_rows"))
+    val nFiles = MultiStore.read(spark, r, "t").inputFiles.length
+    assert(nFiles == 8, s"expected 8 data files, got $nFiles")
     // a narrow range must open strictly fewer files than the table has
     val pruned = MultiStore.readPruned(spark, r, "t", "id", lit(10L), lit(20L))
     val opened = pruned.inputFiles.length
@@ -447,16 +443,21 @@ class MultiStoreSpec extends SparkSpec {
     assert(pruned.as[(Long, String)].collect().toSet == expected)
     // a disjoint range returns empty with the data schema, zero files opened
     val none = MultiStore.readPruned(spark, r, "t", "id", lit(1000L), lit(2000L))
+    assert(none.inputFiles.isEmpty)
     assert(none.count() == 0L)
     assert(none.columns.toSeq == Seq("id", "payload"))
-    // the sidecar is swept WITH its version: after two more stats commits
-    // (keep=2), v=0 and stats_v=0 are both gone, live zone map intact
-    MultiStore.commit(r, Map("t" -> data), stats = Map("t" -> Seq("id")), keep = 2)
-    MultiStore.commit(r, Map("t" -> data), stats = Map("t" -> Seq("id")), keep = 2)
+    // the footers are the only stats: no stats_v=/bloom_v= entry is ever
+    // written, whatever a commit asks for
+    MultiStore.commit(r, Map("t" -> data), stats = Map("t" -> Seq("id")),
+      bloom = Map("t" -> Seq("id")), keep = 2)
+    MultiStore.optimize(spark, r, "t", targetFiles = 8, clusterBy = Seq("id"),
+      stats = Seq("id"), bloom = Seq("id"), keep = 2)
     val entries = new java.io.File(s"$r/t").listFiles().map(_.getName).toSet
-    assert(!entries.contains("v=0") && !entries.contains("stats_v=0"),
-      s"pruned version's sidecar leaked: $entries")
-    assert(MultiStore.fileStats(spark, r, "t").count() == 8L)
+    assert(!entries.exists(n => n.startsWith("stats_v=") || n.startsWith("bloom_v=")),
+      s"a sidecar was written: $entries")
+    assert(!entries.contains("v=0"), s"retention did not sweep v=0: $entries")
+    assert(MultiStore.readPruned(spark, r, "t", "id", lit(10L), lit(20L))
+      .as[(Long, String)].collect().toSet == expected)
   }
 
   test("concurrent deleteWhere: both deletes land — the CAS retry unions instead of losing updates") {
@@ -559,9 +560,9 @@ class MultiStoreSpec extends SparkSpec {
       Seq(col("x").cast("int"), col("y").cast("int")), bits = 5)
     val data = graft.operators.LayoutOps.clusterByZ(grid.withColumn("z", z), col("z"), 16)
       .drop("z")
-    MultiStore.commit(r, Map("g" -> data), stats = Map("g" -> Seq("x", "y")))
-    val total = MultiStore.fileStats(spark, r, "g").count()
-    assert(total == 16L)
+    MultiStore.commit(r, Map("g" -> data))
+    val total = MultiStore.read(spark, r, "g").inputFiles.length
+    assert(total == 16)
     val pruned = MultiStore.readPrunedRanges(spark, r, "g",
       Seq(("x", lit(4L), lit(7L)), ("y", lit(4L), lit(7L))))
     val opened = pruned.inputFiles.length
@@ -580,8 +581,7 @@ class MultiStoreSpec extends SparkSpec {
     val r = root()
     val grid = for (x <- 0L until 16L; y <- 0L until 16L) yield (x, y, x * 16 + y)
     MultiStore.commit(r, Map("g" ->
-      grid.toDF("x", "y", "payload").repartition(16, expr("payload"))),
-      stats = Map("g" -> Seq("x", "y")))
+      grid.toDF("x", "y", "payload").repartition(16, expr("payload"))))
     val ranges = Seq(("x", lit(4L), lit(7L)), ("y", lit(4L), lit(7L)))
     val before = MultiStore.readPrunedRanges(spark, r, "g", ranges).inputFiles.length
     assert(before > 8, s"scattered layout should defeat zone maps, opened only $before")
@@ -670,7 +670,7 @@ class MultiStoreSpec extends SparkSpec {
     // the fold + the OPTIMIZE verb
     MultiStore.commit(r, Map("flags" -> frag), keep = 8)
     MultiStore.optimize(spark, r, "flags", targetFiles = 2,
-      clusterBy = Seq("k"), stats = Seq("k"), keep = 8)
+      clusterBy = Seq("k"), keep = 8)
     val compacted = MultiStore.read(spark, r, "flags")
     assert(compacted.inputFiles.length <= 2)
     // exact row survival through fold + rewrite (independent of any oracle)
@@ -680,7 +680,7 @@ class MultiStoreSpec extends SparkSpec {
     val travel = (0L to 2L).map(id => MultiStore.readAt(spark, r, s"flags_$id", preM))
       .reduce(_ unionByName _).as[(Long, String)].collect().toSet
     assert(travel == rows.toSet)
-    // the compacted layout's zone maps actually skip: a narrow range opens 1 of 2 files
+    // the compacted layout's footers actually skip: a narrow range opens 1 of 2 files
     val hit = MultiStore.readPruned(spark, r, "flags", "k", lit(0L), lit(10L))
     assert(hit.as[(Long, String)].collect().toSet == rows.filter(_._1 <= 10).toSet)
     assert(hit.inputFiles.length == 1, s"zone maps did not skip: ${hit.inputFiles.length} of 2")
@@ -779,6 +779,8 @@ class MultiStoreSpec extends SparkSpec {
   }
 
   test("opening a version runs no Spark job: schema, manifest and probe hash resolve on the driver") {
+    // building a read runs no job; collecting a point read over an empty
+    // delete set, a range read or a Bloom hit runs exactly one, a miss none
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.functions.col
     val r = root()
@@ -805,13 +807,34 @@ class MultiStoreSpec extends SparkSpec {
     }
     sc.addSparkListener(listener)
     try {
-      // frames are only built, never collected
+      // frames are only built, never collected: the listing, footers,
+      // delete-set row count and file pruning all resolve on the driver
       assert(jobsOf(MultiStore.read(spark, r, "t")) == 0)
       assert(jobsOf(MultiStore.readAt(spark, r, "t", m)) == 0)
       assert(jobsOf(MultiStore.readMerged(spark, r, "t")) == 0)
       assert(jobsOf(MultiStore.readMergedAt(spark, r, "t", m)) == 0)
-      // the Bloom lookup's one job is its sidecar collect
-      assert(jobsOf(MultiStore.readPrunedEq(spark, r, "t", "id", lit(42L))) == 1)
+      assert(jobsOf(MultiStore.readPruned(spark, r, "t", "id", lit(10L), lit(20L))) == 0)
+      assert(jobsOf(MultiStore.readPrunedRanges(spark, r, "t",
+        Seq(("id", lit(10L), lit(20L))))) == 0)
+      assert(jobsOf(MultiStore.readPrunedEq(spark, r, "t", "id", lit(42L))) == 0)
+      assert(jobsOf(MultiStore.readPrunedEqMulti(spark, r, "t", "id", Seq(lit(42L), lit(7L)))) == 0)
+      // collected: each read is one scan job
+      def point() = MultiStore.readMerged(spark, r, "t").filter(col("id") === 42L).collect()
+      assert(jobsOf(MultiStore.readPruned(spark, r, "t", "id", lit(10L), lit(20L)).collect()) == 1)
+      assert(jobsOf(MultiStore.readPrunedEq(spark, r, "t", "id", lit(42L)).collect()) == 1)
+      // a non-empty delete set adds the anti-join's broadcast job
+      assert(jobsOf(point()) == 2)
+      // a miss keeps no file: a local frame that collects without a job
+      val miss = MultiStore.readPrunedEq(spark, r, "t", "id", lit(123456L))
+      assert(miss.inputFiles.isEmpty)
+      assert(jobsOf(miss.collect()) == 0)
+      val disjoint = MultiStore.readPruned(spark, r, "t", "id", lit(1000L), lit(2000L))
+      assert(disjoint.inputFiles.isEmpty)
+      assert(jobsOf(disjoint.collect()) == 0)
+      // the empty delete set compactDeletes resets to is never joined
+      MultiStore.compactDeletes(spark, r, "t")
+      assert(jobsOf(point()) == 1)
+      assert(point().map(_.getLong(0)).toSeq == Seq(42L))
       // the counter does see jobs
       assert(jobsOf(MultiStore.read(spark, r, "t").collect()) >= 1)
     } finally sc.removeSparkListener(listener)
@@ -867,5 +890,122 @@ class MultiStoreSpec extends SparkSpec {
     assert(v0.orderBy("id").collect().map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L))
     assert(MultiStore.readMerged(spark, r, "t").orderBy("id").collect().map(_.getLong(0)).toSeq ==
       Seq(1L, 3L))
+  }
+
+  test("footer pruning never drops a matching row: ranges and Bloom probes over every pushable type, NULLs and row groups") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.{Column, Row}
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types._
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.scalacheck.rng.Seed
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false), StructField("l", LongType),
+      StructField("i", IntegerType), StructField("d", DateType),
+      StructField("ts", TimestampType), StructField("s", StringType),
+      StructField("dec", DecimalType(10, 2)), StructField("dbl", DoubleType)))
+    // every column rises with id, so a range-clustered file holds a tight
+    // min/max in each; a tenth of each column is NULL
+    val rnd = new scala.util.Random(7)
+    def orNull[A](a: A): Any = if (rnd.nextInt(10) == 0) null else a
+    def value(c: String, id: Long): Any = c match {
+      case "l"   => id * 10 + rnd.nextInt(10)
+      case "i"   => (id / 3).toInt + rnd.nextInt(3)
+      case "d"   => java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(18000 + id / 2))
+      case "ts"  => new java.sql.Timestamp(1600000000000L + id * 1000000L + rnd.nextInt(1000))
+      case "s"   => f"k${id / 4}%04d" + "aé~z"(rnd.nextInt(4))
+      case "dec" => java.math.BigDecimal.valueOf(id * 125 + rnd.nextInt(100), 2)
+      case "dbl" => id * 0.5 + rnd.nextDouble()
+    }
+    val cols = schema.fieldNames.toSeq.tail
+    def rows(ids: Seq[Long], nulls: Boolean) = spark.createDataFrame(ids.map { id =>
+      Row.fromSeq(id +: cols.map(c => if (nulls) null else orNull(value(c, id))))
+    }.asJava, schema)
+    val live = rows(0L until 600L, nulls = false)
+    val r    = root()
+    // store "t", written by hand into a v=0 dir plus its manifest, holds
+    // range-clustered files, one file of many row groups and one all-NULL
+    // file, with Bloom filters on the string and long columns
+    def bloomed(w: org.apache.spark.sql.DataFrameWriter[Row]) =
+      w.option("parquet.bloom.filter.enabled#s", "true")
+        .option("parquet.bloom.filter.enabled#l", "true")
+    bloomed(live.filter(col("id") < 400).repartitionByRange(4, col("id")).write)
+      .parquet(s"$r/t/v=0")
+    bloomed(live.filter(col("id") >= 400).coalesce(1).write.mode("append"))
+      .option("parquet.block.size", "1")
+      .option("parquet.page.size.row.check.min", "10")
+      .option("parquet.page.size.row.check.max", "10")
+      .parquet(s"$r/t/v=0")
+    bloomed(rows(600L until 650L, nulls = true).coalesce(1).write.mode("append"))
+      .parquet(s"$r/t/v=0")
+    Files.write(new java.io.File(s"$r/_graft_manifest_m=0").toPath, "t=0\n".getBytes("UTF-8"))
+    val all = live.unionByName(rows(600L until 650L, nulls = true))
+    // "plain" is committed without stats or bloom, "blm" with a Bloom
+    // filter on the string column
+    MultiStore.commit(r, Map("plain" -> all.repartitionByRange(6, col("id"))))
+    MultiStore.commit(r, Map("blm" -> all.repartitionByRange(6, col("dec"))),
+      bloom = Map("blm" -> Seq("s")))
+    val stores = Seq("t", "plain", "blm")
+    val rowGroups = MultiStore.read(spark, r, "t").inputFiles.map { f =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f), spark.sessionState.newHadoopConf()))
+      try reader.getRowGroups.size finally reader.close()
+    }
+    assert(rowGroups.max > 1, s"no file of several row groups: ${rowGroups.toSeq}")
+
+    // each store's rows with their file, held on the driver: the truth is
+    // the predicate evaluated over a local relation, untouched by parquet
+    val local = stores.map { st =>
+      val withFile = MultiStore.read(spark, r, st)
+        .select(col("*"), col("_metadata.file_name").as("file"))
+      st -> spark.createDataFrame(withFile.collect().toSeq.asJava, withFile.schema)
+    }.toMap
+    def name(f: String) = new org.apache.hadoop.fs.Path(f).getName
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("id").collect().map(_.getLong(0)).toSeq.sorted
+    var prunedFiles = 0
+    def check(st: String, pred: Column, read: org.apache.spark.sql.DataFrame): Boolean = {
+      val truth     = local(st).filter(pred)
+      val opened    = read.inputFiles.map(name).toSet
+      val needed    = truth.select("file").collect().map(_.getString(0)).toSet
+      val all       = local(st).select("file").distinct().collect().map(_.getString(0)).toSet
+      prunedFiles += (all -- opened).size
+      val ok = ids(read) == ids(truth) &&
+        ids(MultiStore.read(spark, r, st).filter(pred)) == ids(truth) && needed.subsetOf(opened)
+      if (!ok) println(s"$st $pred: opened $opened, needed $needed, " +
+        s"got ${ids(read)}, want ${ids(truth)}")
+      ok
+    }
+
+    // a probe of each column's type, drawn from its own values or past
+    // its ends, with an INT literal standing in for a BIGINT one at times
+    def probe(c: String): Gen[Column] = Gen.choose(-20L, 680L).flatMap { id =>
+      val v = value(c, id)
+      c match {
+        case "l" => Gen.oneOf(lit(v), lit(v.asInstanceOf[Long].toInt))
+        case _   => Gen.const(lit(v))
+      }
+    }
+    val sample = for {
+      c  <- Gen.oneOf(cols)
+      lo <- probe(c)
+      hi <- probe(c)
+      p1 <- probe(c)
+      p2 <- probe(c)
+    } yield (c, lo, hi, Seq(p1, p2))
+    val prop = Prop.forAll(sample) { case (c, lo, hi, probes) =>
+      stores.forall { st =>
+        check(st, col(c) >= lo && col(c) <= hi,
+          MultiStore.readPrunedRanges(spark, r, st, Seq((c, lo, hi)))) &&
+          probes.zip(MultiStore.readPrunedEqMulti(spark, r, st, c, probes)).forall {
+            case (p, read) => check(st, col(c) === p, read)
+          }
+      }
+    }
+    val result = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(20).withInitialSeed(Seed(11L)), prop)
+    assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
+    assert(prunedFiles > 0, "no read pruned a file: the property checked nothing")
   }
 }
