@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** BENCH harness (driver contract): run every registered query on
   * SPARK_GRAFT_SF_DIR, print ONE JSON metric line. Each query executes via a
   * `noop`-format write: unlike count() — under which ColumnPruning deletes
@@ -18,7 +16,7 @@ object Bench {
     // overrides it for scale runs where partitions must track the DATA
     // (SCALE.md 30x protocol), not the box.
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
+    val spark = Graft.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shuffle)
       .config("spark.sql.adaptive.enabled", "true")

@@ -1,10 +1,12 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.internal.StaticSQLConf
 
 /** Library entry point: one place that builds a correctly-configured
-  * session (UTC, AQE, 32-way local shuffle, nanos-timestamp events
-  * readable, LAST_WIN map merges, custom SQL functions registered via
+  * session (a codegen cache that holds a curation pass, UTC, AQE,
+  * 32-way local shuffle, nanos-timestamp events readable, LAST_WIN map
+  * merges, custom SQL functions registered via
   * [[GraftExtensions]] — the same builders `spark.sql.extensions=
   * graft.GraftExtensions` injects cluster-wide) and registers the
   * test tables as SQL views so `spark.sql` round-trips the same queries
@@ -12,8 +14,42 @@ import org.apache.spark.sql.SparkSession
   */
 object Graft {
 
+  /** Entries of Spark's JVM-wide cache of compiled generated classes
+    * (`spark.sql.codegen.cache.maxEntries`); see [[session]].
+    */
+  val CodegenCacheEntries: Int = 1000
+
+  /** A session builder carrying the static confs every graft JVM runs
+    * with: the codegen cache size ([[CodegenCacheEntries]]). `session`,
+    * `Verify`, `Bench` and the test session all start from it, so tests,
+    * the oracle dump and the benchmark compile the same way.
+    */
+  def builder(): SparkSession.Builder =
+    SparkSession.builder()
+      .config(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key, CodegenCacheEntries.toLong)
+
+  /** The engine's session (see the object header for what it sets).
+    *
+    * Codegen cache. Spark keeps whole-stage and expression classes that
+    * Janino compiled in one JVM-wide LRU cache of 100 entries by default.
+    * One pass of the curation pipeline (dedup, graph labels, similarity,
+    * packing) needs about 250, so at the default each pass evicted the
+    * previous pass's classes and compiled them all again: about 204
+    * compiles and 2.0-2.2 s of compile time in every timed pass of the
+    * benchmark, 929 compiles in a 4-pass run, on a 4-core VM. At
+    * [[CodegenCacheEntries]], about 4x that working set, the same run
+    * compiles 249 classes, 4 of them in the timed passes; the pass p50
+    * fell from 10.5 to 7.3 s (seeds 1-10), for about 3.5 MB more live
+    * heap. Two traps:
+    *   - the conf is static: `CodeGenerator` reads it once, at the JVM's
+    *     first codegen, and `getOrCreate` on a session that already
+    *     exists ignores it with a warning. Set it on the builder, as here;
+    *   - the cache key pairs the code with a class loader, so in local
+    *     mode the driver thread and the task threads each compile a class
+    *     once.
+    */
   def session(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession = {
-    val spark = SparkSession.builder()
+    val spark = builder()
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)

@@ -19,4 +19,11 @@ class GraftSessionSpec extends SparkSpec {
       "SELECT cosine_sim(embedding, embedding) FROM embeddings WHERE vec_id = 1").first().getDouble(0)
     assert(math.abs(self - 1.0) < 1e-9)
   }
+
+  test("the test session carries the engine's codegen cache size") {
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      Graft.CodegenCacheEntries.toString)
+    assert(org.apache.spark.sql.internal.SQLConf.get.codegenCacheMaxEntries ==
+      Graft.CodegenCacheEntries)
+  }
 }

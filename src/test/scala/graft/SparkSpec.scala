@@ -4,10 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs — one JVM-wide session (getOrCreate),
-  * UTC, small shuffle fan-out to keep 6k-row tests fast.
+  * UTC, small shuffle fan-out to keep 6k-row tests fast, and the engine's
+  * static confs from [[Graft.builder]].
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy implicit val spark: SparkSession = SparkSession.builder()
+  lazy implicit val spark: SparkSession = Graft.builder()
     .master("local[4]")
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
