@@ -69,11 +69,11 @@ object Bench {
     // isolated-run protocol recorded in BASELINE.md).
     //
     // r11 root-cause of the x2_fast two-round stall flag: focused repeats
-    // (tools.Repeats, 10 reps, identical bhj=13 plans every run) measured
-    // x2_fast 2.3-4.0 s with a 20.9 s excursion under the every-10-queries
-    // cadence vs a FLAT 2.08-2.47 s (spread 0.38) with a GC between
-    // repeats; j5 against a grown-dims 10x directory likewise 2.6-19.9 s
-    // bimodal vs flat 2.4-2.8 s. The slow mode is organic full-GC /
+    // (graft.tools.Repeats, last in commit 04b8133: 10 reps, identical
+    // bhj=13 plans every run) measured x2_fast 2.3-4.0 s with a 20.9 s
+    // excursion under the every-10-queries cadence vs a FLAT 2.08-2.47 s
+    // (spread 0.38) with a GC between repeats; j5 against a grown-dims 10x
+    // directory likewise 2.6-19.9 s bimodal vs flat 2.4-2.8 s. The slow mode is organic full-GC /
     // ContextCleaner debt (each heavy repeat leaves ~0.5 GB of checkpoint
     // blocks + broadcast relations whose weak refs only clear under driver
     // GC) landing INSIDE a later timed window. So: any repeat heavy enough

@@ -49,15 +49,6 @@ object TextFunctions {
     */
   val parse_mentions: UserDefinedFunction = udf((s: String) => parseMentions(s))
 
-  /** Edge extraction for the mention graph (G1): doc id + text -> exploded
-    * (src, dst_path) edge rows.
-    */
-  def mentionEdges(docs: org.apache.spark.sql.DataFrame, idCol: String, textCol: String): org.apache.spark.sql.DataFrame =
-    docs.select(
-      col(idCol).as("src"),
-      explode(parse_mentions(col(textCol))).as("mention"))
-      .select(col("src"), udf(extractMentionPath _).apply(col("mention")).as("dst"))
-
   // ===== C3: truncation with marker (trace_aggregator.py:41-53) =====
 
   def truncateWithMarker(c: Column, maxLen: Int): Column =

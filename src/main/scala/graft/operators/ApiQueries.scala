@@ -3,7 +3,7 @@ package graft.operators
 import java.sql.Timestamp
 import java.time.Instant
 
-import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 

@@ -255,23 +255,12 @@ object Curation {
   def bpeMerges(docs: DataFrame, textCol: String, k: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    bpeTrain(docs, textCol, k)._2
+    bpeTrain(docs, textCol, k)
       .toDF("round", "left_sym", "right_sym", "pair_count")
   }
 
-  /** The ENCODE side of BPE at corpus scale: per-word token counts under
-    * the first `k` learned merges — (word, n_tokens), one row per distinct
-    * corpus word. This is the artifact a 100 TB tokenization job joins the
-    * corpus against: the merges are applied once on the VOCAB table, and
-    * the corpus is tokenized by a single (word -> n_tokens) map join —
-    * never re-processed per merge rule.
-    */
-  def bpeTokenCounts(docs: DataFrame, textCol: String, k: Int): DataFrame =
-    bpeTrain(docs, textCol, k)._1
-      .select(col("word"), size(split(trim(col("seq")), " ")).as("n_tokens"))
-
   private def bpeTrain(docs: DataFrame, textCol: String, k: Int)
-      : (DataFrame, Seq[(Int, String, String, Long)]) = {
+      : Seq[(Int, String, String, Long)] = {
     val words = docs
       .select(explode(split(col(textCol), " ")).as("word"))
       .filter(length(col("word")) >= 2 && !col("word").contains("|"))
@@ -319,7 +308,7 @@ object Curation {
           replace(col("seq"), lit(" " + l + " " + rt), lit(" " + l.stripSuffix("|") + rt)))
         .localCheckpoint()
     }
-    (seqs, rounds.result())
+    rounds.result()
   }
 
   /** Driver-local BPE trainer for REALISTIC k (hundreds-thousands of
@@ -424,7 +413,7 @@ object Curation {
       .toDF("round", "left_sym", "right_sym", "pair_count")
   }
 
-  /** [[bpeTokenCounts]]'s realistic-k sibling: the (word, n_tokens) vocab
+  /** The encode side of BPE at realistic k: the (word, n_tokens) vocab
     * map from the driver-local trainer, handed back as a frame the encode
     * join consumes — vocab-sized, so AQE broadcasts it.
     */

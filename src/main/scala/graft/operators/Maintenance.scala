@@ -53,18 +53,6 @@ object Maintenance {
     table.withColumn("__rn", row_number().over(w)).filter(col("__rn") > 1).drop("__rn")
   }
 
-  /** M5-adjacent: cache + refresh discipline for hot dimension tables —
-    * the engine-side analog of the reference's TTL scan cache.
-    */
-  def cached(spark: SparkSession, df: DataFrame, name: String): DataFrame = {
-    df.createOrReplaceTempView(name)
-    spark.catalog.cacheTable(name)
-    spark.table(name)
-  }
-
-  def invalidate(spark: SparkSession, name: String): Unit =
-    spark.catalog.uncacheTable(name)
-
   /** Upsert-by-overwrite (the MERGE substitute): rows in `updates` replace
     * same-key rows in `base`; everything else is kept. One shuffle on the
     * key; write back with dynamic partition overwrite at scale.

@@ -74,16 +74,6 @@ object Multimodal {
     def stats(bytes: Array[Byte], durationMs: Long): MediaStats
   }
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false),
-    StructField("uri", StringType, nullable = false),
-    StructField("bytes", BinaryType, nullable = true),
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("duration_ms", LongType, nullable = false),
-  ))
-
   /** Byte-math decoder: deterministic, engine-replayable outputs that are
     * pure functions of the input bytes — the x28 oracle's contract (DuckDB
     * can recompute every feature per-character). No pixel notion, so
@@ -203,15 +193,6 @@ object Multimodal {
     */
   def metadataOnly(media: DataFrame): DataFrame =
     media.select("media_id", "kind", "width", "height", "duration_ms")
-
-  /** Size-bucketed repartitioning so decode batches are byte-balanced, not
-    * row-balanced — large videos don't pile into one task.
-    */
-  def repartitionBySize(media: DataFrame, targetPartitions: Int): DataFrame =
-    media
-      .withColumn("__size_bucket", pmod(xxhash64(col("media_id")), lit(targetPartitions)))
-      .repartition(targetPartitions, col("__size_bucket"))
-      .drop("__size_bucket")
 
   /** A deterministic synthetic media table derived from `documents`: each
     * doc becomes one media row whose `bytes` are an md5-CHAIN of its text

@@ -39,18 +39,6 @@ object ScaleJoins {
       .drop("__salt")
   }
 
-  /** Write both sides bucketed on the join key so subsequent joins are
-    * shuffle-free (bucket pruning + no exchange). Local-mode demo of the
-    * production pattern: facts bucketed once, joined many times.
-    */
-  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
-    df.write
-      .mode("overwrite")
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .format("parquet")
-      .saveAsTable(table) // managed table under spark.sql.warehouse.dir
-
   /** Join two pre-bucketed tables; with matching bucket specs Catalyst
     * plans a SortMergeJoin with NO Exchange on either side.
     */

@@ -569,11 +569,13 @@ object Similarity {
     // At 100 TB the block key is a cheap partitioner (cluster id from IVF
     // assignment, LSH band, or an upstream dedup bucket); x10's sign-LSH is
     // the unblocked scale path. The |block|^2 contract is MEASURED, not
-    // theoretical: at the 30x ScaleUp directory (fixed label vocabulary,
-    // so blocks grow 30x) this query runs 78.5s vs 0.63s at sf0.1 — see
-    // SCALE.md's 30x capstone. Blocks must be bounded by construction. The driver's synthetic embeddings are
-    // near-orthogonal (within-label max sim ≈ 0.47), so the demo threshold
-    // is 0.3; production near-dup sits at 0.9+.
+    // theoretical: at a 30x scaled-up directory (fixed label vocabulary,
+    // so blocks grow 30x) this query ran 78.5s vs 0.63s at sf0.1 — see
+    // SCALE.md's 30x capstone (its `graft.ScaleUp` generator was last in
+    // commit 04b8133). Blocks must be bounded by construction. The
+    // driver's synthetic embeddings are near-orthogonal (within-label max
+    // sim ≈ 0.47), so the demo threshold is 0.3; production near-dup sits
+    // at 0.9+.
     val e = t.embeddings.select(col("label"), col("vec_id"), col("embedding"))
     e.as("a")
       .join(e.as("b"), col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))
@@ -1474,11 +1476,12 @@ object Similarity {
     * cosine ranking, for any (nQueries, k, nCells, nProbe). The registry
     * row pins (10, 5, 16, 4) for oracle compactness; the eval's value at
     * scale is SWEEPING nProbe against these curves before queries degrade
-    * — `graft.tools.RetrievalSweep` runs the sweep and SCALE.md records
-    * the recall/nDCG-vs-nProbe table at the 30× decade. Plan shape is
-    * grid-independent: exact side is probe-bounded (nQueries broadcast
-    * queries map-side against the corpus), the IVF side is the production
-    * probe, everything after is nQueries×k-sized.
+    * — SCALE.md records the recall/nDCG-vs-nProbe table at the 30× decade
+    * (`graft.tools.RetrievalSweep` ran that sweep; commit 04b8133 was the
+    * last to have it). Plan shape is grid-independent: exact side is
+    * probe-bounded (nQueries broadcast queries map-side against the
+    * corpus), the IVF side is the production probe, everything after is
+    * nQueries×k-sized.
     */
   def retrievalEval(emb: DataFrame, nQueries: Int, k: Int,
                     nCells: Int, nProbe: Int): DataFrame =
@@ -1486,11 +1489,11 @@ object Similarity {
 
   /** [[retrievalEval]] with the probe frame EXPLICIT — (vec_id, embedding)
     * rows that need not be corpus members (probe ids outside the corpus id
-    * space no-op the self-exclusion). `RetrievalSweep --mixed` feeds
-    * cross-cluster midpoints through this: corpus-member probes saturate
-    * recall on a tightly-clustered corpus (their top-k cohabits their own
-    * cell), while a midpoint's exact top-k straddles two cells — the query
-    * class an nProbe curve exists to price.
+    * space no-op the self-exclusion), such as the cross-cluster midpoints
+    * of `RetrievalSweep --mixed` (last in commit 04b8133): corpus-member
+    * probes saturate recall on a tightly-clustered corpus (their top-k
+    * cohabits their own cell), while a midpoint's exact top-k straddles two
+    * cells — the query class an nProbe curve exists to price.
     */
   def retrievalEvalProbes(emb: DataFrame, probes: DataFrame, k: Int,
                           nCells: Int, nProbe: Int): DataFrame = {

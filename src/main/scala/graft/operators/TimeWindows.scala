@@ -151,9 +151,10 @@ object TimeWindows {
     // range condition, not GC, decides matching). Each no-data batch costs
     // a full incremental replan + 2 partitions x 4 state stores of delta
     // commits + offset/commit log writes: half this replay's micro-batches
-    // were no-data (LoopPlans: 12 -> 8 executions). State eviction itself
-    // is still exercised — the watermark advances between DATA batches and
-    // the next batch evicts. Oracle unchanged (same memory-sink rows).
+    // were no-data (12 -> 8 executions, counted with graft.tools.LoopPlans,
+    // last in commit 04b8133). State eviction itself is still exercised —
+    // the watermark advances between DATA batches and the next batch
+    // evicts. Oracle unchanged (same memory-sink rows).
     val prevNoData = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     val query =

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
 
@@ -37,10 +37,6 @@ object TrainPrep {
     (0 until 6)
       .map(j => s"(strpos('0123456789abcdef', substr(md5($s), ${j + 1}, 1)) - 1) * ${math.pow(16, 5 - j).toLong}")
       .mkString("(", " + ", ")")
-
-  /** Distinct word-k-grams per document: (doc_id, sh). */
-  private def wordGrams(df: DataFrame, k: Int): DataFrame =
-    Curation.wordGrams(df, "doc_id", "text", k)
 
   val x14_stratified_sample = Q(
     "x14_stratified_sample",
@@ -291,7 +287,7 @@ object TrainPrep {
     // merges and report per-lang whitespace-vs-BPE token counts — the
     // vocab-fertility audit a tokenizer run files. The 100 TB plan shape
     // is the point: merges are applied ONCE over the vocab table
-    // (Curation.bpeTokenCounts), the corpus reduces to (lang, word, cnt)
+    // (Curation.bpeTokenCountsLocal), the corpus reduces to (lang, word, cnt)
     // grain with map-side combine, and tokenization is a single join
     // against the vocab-sized map — the corpus is never re-processed per
     // merge rule. Words outside the trained vocab (length < 2) count as
@@ -381,7 +377,6 @@ object TrainPrep {
     // driver round-trips, so at 100 TB this is one pipelined job: two
     // window shuffles (hash, stratum), one histogram-free quality scan,
     // one broadcast anti-join, one final aggregation.
-    import org.apache.spark.sql.expressions.Window
     val toks = split(col("text"), " ")
     val corpus = t.documents
       .filter(col("doc_id") % 50 =!= 11)

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.Q
 
 /** VARIANT event payloads — the reference's `dict[str, Any]` event data
   * (`amplifierd/amplifierd/models/trace.py:27`, field access
@@ -55,30 +55,6 @@ object VariantEvents {
     events.select(
       col("event_id"), col("event_type"),
       parse_json(payloadJson(get_json_object(col("props"), "$.k").cast("long"))).as("data"))
-
-  /** The string-path twin of [[ingest]] — same payloads kept as JSON
-    * TEXT — and of [[toolRollup]] below: the A/B pair
-    * `graft.tools.VariantScale` measures (every access re-parses the
-    * full string through get_json_object vs one parse at ingest).
-    */
-  def ingestString(events: DataFrame): DataFrame =
-    events.select(
-      col("event_id"), col("event_type"),
-      payloadJson(get_json_object(col("props"), "$.k").cast("long")).as("data_json"))
-
-  def toolRollupString(ingested: DataFrame): DataFrame =
-    ingested
-      .groupBy(
-        coalesce(get_json_object(col("data_json"), "$.tool.name"), lit("none")).as("tool"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(get_json_object(col("data_json"), "$.tool.ms").cast("long")).as("sum_ms"),
-        sum(get_json_object(col("data_json"), "$.k").cast("long")).as("sum_k"),
-        count(get_json_object(col("data_json"), "$.retries")).as("n_retried"),
-        count(get_json_object(col("data_json"), "$.tags[0]")).as("n_tagged"),
-        sum(when(get_json_object(col("data_json"), "$.ok") === "true", 1L)
-          .otherwise(0L)).as("n_ok"))
-      .orderBy("tool")
 
   /** The C11 access paths over VARIANT: two typed extractions (string
     * tool name, long ms / k), one existence predicate (retries present),
@@ -177,8 +153,9 @@ object VariantEvents {
     * — VariantSpec pins the plan shape). Same delimiter-count window as
     * w1; what changes is that NO string re-parse happens per event — at
     * 100 TB of trace events that is the difference between a CPU-bound
-    * scan and an IO-bound one (VariantScale measured 3.0×). The oracle
-    * replays the sessionization and extracts k from its own JSON string.
+    * scan and an IO-bound one (`graft.tools.VariantScale`, last in commit
+    * 04b8133, measured 3.0×). The oracle replays the sessionization and
+    * extracts k from its own JSON string.
     */
   val w10_variant_turns = Q(
     "w10_variant_turns",
@@ -227,8 +204,9 @@ object VariantEvents {
     * equi-join + range-residual plan as j3 (never a nested loop); what
     * changes is that the reference's highest-traffic shape
     * (`trace_aggregator.py:56-211` re-parsing event `data` per access)
-    * pays its payload-parse cost once at ingest. A/B: VariantScale's
-    * j8-shaped pass measures string-reparse vs shredded scan (SCALE.md).
+    * pays its payload-parse cost once at ingest. A/B: SCALE.md records a
+    * j8-shaped pass of string-reparse vs shredded scan (measured with
+    * `graft.tools.VariantScale`, last in commit 04b8133).
     */
   val j8_variant_prepost = Q(
     "j8_variant_prepost",

@@ -54,10 +54,6 @@ object EventLog {
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .json(path)
 
-  /** S2: whole-file JSON entity read (session.json-style single objects). */
-  def readJsonEntity(spark: SparkSession, path: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.read.schema(schema).option("multiLine", true).json(path)
-
   /** S7: append-only sink — one job commit per append, the coarser (and
     * strictly safer) analog of the reference's per-line file append.
     */

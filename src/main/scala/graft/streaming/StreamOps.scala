@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, ForeachWriter, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Streaming semantics (SURVEY §2.9): the reference's SSE fan-out /
   * token-folding / tagging / dead-letter behaviors on Structured Streaming.
@@ -283,24 +283,6 @@ object StreamOps {
         col("timestamp").as("ts"),
         lit("keepalive").as("event"),
         lit("{}").as("data"))
-
-  /** ST9: cooperative cancellation with a terminal control row — stop the
-    * query and append one cancellation marker to the sink path.
-    */
-  def cancelWithMarker(query: StreamingQuery, spark: SparkSession, sinkPath: String, sessionId: String): Unit = {
-    query.stop()
-    import spark.implicits._
-    Seq((sessionId, "execution_cancelled"))
-      .toDF("session_id", "event")
-      .write.mode("append").parquet(sinkPath)
-  }
-
-  /** Batch+live unification (ST4): read the historical directory as a batch
-    * frame, then continue from a stream — consumers union the two views.
-    */
-  def backfillThenLive(spark: SparkSession, schema: org.apache.spark.sql.types.StructType, dir: String): (DataFrame, DataFrame) =
-    (spark.read.schema(schema).json(dir),
-      spark.readStream.schema(schema).json(dir))
 }
 
 /** One metered observation for [[StreamOps.streamingZscore]]. */

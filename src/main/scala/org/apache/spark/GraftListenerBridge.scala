@@ -1,10 +1,12 @@
 package org.apache.spark
 
-/** Bridge to the private[spark] listener bus drain, used by diagnostic
-  * tools (graft.tools.Repeats) that read QueryExecutionListener-captured
-  * plan facts immediately after a synchronous action: listener events are
-  * posted asynchronously, so without a drain the repeat that just finished
-  * could be attributed the NEXT repeat's plans.
+/** Bridge to the private[spark] listener bus drain. Listener events are
+  * posted asynchronously, so a caller that reads what its listeners
+  * captured right after a synchronous action must drain the bus first, or
+  * the action that just finished is credited with the next one's events.
+  * Callers: perfbench's tracer (`perfbench/src/perfbench/Trace.scala`),
+  * which closes each span's job and task counts with it, and
+  * MultiStoreSpec's job-count cases.
   */
 object GraftListenerBridge {
   def flush(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()

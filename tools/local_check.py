@@ -21,8 +21,8 @@ def main(sf_dir: str, out_dir: str) -> int:
     import os
     con = duckdb.connect()
     for t in TABLES:
-        # driver testdata ships single files; ScaleUp output is a directory
-        # of part files under the same <table>.parquet name
+        # driver testdata ships single files; a scaled-up copy (SCALE.md)
+        # is a directory of part files under the same <table>.parquet name
         path = f"{sf_dir}/{t}.parquet"
         if os.path.isdir(path):
             path = f"{path}/*.parquet"
