@@ -302,11 +302,13 @@ object Curation {
       val Array(l, rt) = top.getString(0).split(" ")
       rounds += ((r, l.stripSuffix("|"), rt.stripSuffix("|"), top.getLong(1)))
       // literal left-to-right non-overlapping replace — identical semantics
-      // in java.lang.String.replace (Spark) and DuckDB replace()
-      seqs = seqs
-        .withColumn("seq",
-          replace(col("seq"), lit(" " + l + " " + rt), lit(" " + l.stripSuffix("|") + rt)))
-        .localCheckpoint()
+      // in java.lang.String.replace (Spark) and DuckDB replace(); the last
+      // round's merge is never read, so it is not applied
+      if (r < k)
+        seqs = seqs
+          .withColumn("seq",
+            replace(col("seq"), lit(" " + l + " " + rt), lit(" " + l.stripSuffix("|") + rt)))
+          .localCheckpoint()
     }
     rounds.result()
   }

@@ -637,13 +637,8 @@ object Dedup {
     val p  = new org.apache.hadoop.fs.Path(path, "_graft_shards")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val in = fs.open(p)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val tmp = new Array[Byte](64)
-      var n   = in.read(tmp)
-      while (n > 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-      new String(buf.toByteArray, "UTF-8").trim.toInt
-    } finally in.close()
+    try new String(in.readAllBytes(), "UTF-8").trim.toInt
+    finally in.close()
   }
 
   /** The incremental probe against a PERSISTED index at `path` (written by

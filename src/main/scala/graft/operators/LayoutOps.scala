@@ -226,8 +226,8 @@ object LayoutOps {
     * tight min/max on EVERY z-dimension. A `clusterBy` (lexicographic
     * range) layout prunes on its first column and not the rest; the
     * z-layout's files are bounded
-    * 2-D tiles, so [[graft.sources.MultiStore.readPrunedRanges]] skips on
-    * ALL dimensions at once. CAS-pinned to the version it read — an
+    * 2-D tiles, so a box filter on [[graft.sources.MultiStore.read]] skips
+    * on ALL dimensions at once. CAS-pinned to the version it read — an
     * OPTIMIZE racing a data commit loses loudly (the m14 contract).
     */
   def optimizeZorder(spark: org.apache.spark.sql.SparkSession, root: String,
@@ -250,7 +250,7 @@ object LayoutOps {
   /** m21: OPTIMIZE ZORDER driver-stamped — a hash-scattered ingest layout
     * (every file spans the full range of BOTH dimensions, so its zone maps
     * prune nothing) is re-clustered by [[optimizeZorder]], then a 2-D box
-    * query runs through the range-pruned read. In-row guards pin the
+    * query runs as a box filter on the read. In-row guards pin the
     * point: the same boxed read opens at most half the files it did
     * pre-optimize (enforced at >=500 rows; below that the box holds too
     * few rows for skipping to be meaningful), rows are identical either
@@ -283,15 +283,13 @@ object LayoutOps {
         .agg(max(col("doc_id"))).head().getLong(0) + 1L
       val lo = nRows / 10L
       val hi = 3L * nRows / 20L - 1L
-      val ranges = Seq(
-        ("doc_id", lit(lo), lit(hi)),
-        ("n_chars", lit(150L), lit(300L)))
-      val beforeFiles = MultiStore.readPrunedRanges(spark, root, "docs", ranges)
-        .inputFiles.length
+      val box = col("doc_id") >= lo && col("doc_id") <= hi &&
+        col("n_chars") >= 150L && col("n_chars") <= 300L
+      val beforeFiles = MultiStore.scannedFiles(MultiStore.read(spark, root, "docs").filter(box))
       optimizeZorder(spark, root, "docs", targetFiles = 16,
         Seq("doc_id", "n_chars"), bits = 8)
-      val pruned     = MultiStore.readPrunedRanges(spark, root, "docs", ranges)
-      val afterFiles = pruned.inputFiles.length
+      val pruned     = MultiStore.read(spark, root, "docs").filter(box)
+      val afterFiles = MultiStore.scannedFiles(pruned)
       require(afterFiles <= beforeFiles,
         s"z-order made pruning WORSE: $beforeFiles -> $afterFiles files")
       if (nRows >= 500)

@@ -77,8 +77,7 @@ object ScaleJoins {
     // hash BOTH sides in the dim key's type: xxhash64 is type-sensitive
     // (INT 7 and BIGINT 7 hash differently), and a fact key arriving in a
     // different width would bloom-false-NEGATIVE — matching fact rows
-    // silently dropped before the semi-join can see them (the same bug
-    // class as MultiStore.readPrunedEq's probe cast)
+    // silently dropped before the semi-join can see them
     val keyType = dim.schema(key).dataType
     val bloomDf = dim.agg(
       GraftColumnBridge

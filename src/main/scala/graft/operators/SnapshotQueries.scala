@@ -122,11 +122,11 @@ object SnapshotQueries {
   }
 
   /** m12: footer-driven file pruning — a range-clustered commit leaves
-    * each file's footer with a tight min/max per column; the range read
-    * opens only intersecting files. The result must equal the plain filter (pruning is a superset
-    * + residual), which is exactly what the oracle checks; the spec
-    * (MultiStoreSpec) additionally asserts the file-skip actually
-    * happened — fewer files opened than committed.
+    * each file's footer with a tight min/max per column; the range filter
+    * on the read scans only intersecting files. The result must equal the
+    * plain filter (pruning is a superset + residual), which is exactly what
+    * the oracle checks; the spec (MultiStoreSpec) additionally asserts the
+    * file-skip actually happened — fewer files scanned than committed.
     */
   val m12_stats_pruning = Q(
     "m12_stats_pruning",
@@ -142,8 +142,9 @@ object SnapshotQueries {
     withTempStore("graft-statsprune") { root =>
       MultiStore.commit(root,
         Map("orders" -> t.orders.repartitionByRange(8, col("o_orderdate"))))
-      MultiStore.readPruned(spark, root, "orders", "o_orderdate",
-          lit("1997-01-01").cast("timestamp"), lit("1997-06-30").cast("timestamp"))
+      MultiStore.read(spark, root, "orders")
+        .filter(col("o_orderdate") >= lit("1997-01-01").cast("timestamp") &&
+          col("o_orderdate") <= lit("1997-06-30").cast("timestamp"))
         .groupBy(col("o_orderpriority").as("priority"))
         .agg(count(lit(1)).as("n_orders"),
           // decimal-exact sum, then one cast: addition order cannot move
@@ -280,7 +281,8 @@ object SnapshotQueries {
       val before = MultiStore.readAt(spark, root, "docs", preOpt)
         .agg(count(lit(1)).as("n_before"))
       // serve a range query pruned by the optimized layout's footers
-      MultiStore.readPruned(spark, root, "docs", "doc_id", lit(100L), lit(399L))
+      MultiStore.read(spark, root, "docs")
+        .filter(col("doc_id") >= 100L && col("doc_id") <= 399L)
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("chars"))
         .crossJoin(before)
@@ -294,11 +296,12 @@ object SnapshotQueries {
     * range spans the whole corpus), so a min/max-pruned read would open
     * every file, but each doc_id lands in ~one file's Bloom filter. Every
     * run commits the store with a native parquet Bloom filter on doc_id in
-    * each file, runs five real point lookups through
-    * [[graft.sources.MultiStore.readPrunedEqMulti]], and guards driver-side
-    * that the Bloom filters actually skipped (≤2 files opened per
-    * lookup out of 16). False positives are stripped by the residual
-    * equality filter, which is exactly what the oracle checks.
+    * each file, runs five real point lookups as equality filters on one
+    * [[graft.sources.MultiStore.read]], and guards driver-side that the
+    * Bloom filters actually skipped (≤2 files scanned per lookup out of
+    * 16, [[graft.sources.MultiStore.scannedFiles]]). False positives are
+    * stripped by the residual equality filter, which is exactly what the
+    * oracle checks.
     */
   val m15_bloom_index = Q(
     "m15_bloom_index",
@@ -313,17 +316,16 @@ object SnapshotQueries {
           .repartition(16, col("doc_id") * 2654435761L % 1000)), // hash-scattered
         bloom = Map("docs" -> Seq("doc_id")))
       val keys = Seq(7L, 113L, 229L, 331L, 433L)
-      // batched point-lookup API: snapshot, listing and footers read once
-      // for the key set, per-key pruning and the opened-files guard
-      // unchanged
-      val lookups = MultiStore
-        .readPrunedEqMulti(spark, root, "docs", "doc_id", keys.map(lit(_)))
-        .zip(keys).map { case (hit, k) =>
-          val opened = hit.inputFiles.length
-          require(opened <= 2,
-            s"bloom index failed to skip: doc_id=$k opened $opened of 16 files")
-          hit
-        }
+      // one read for the key set: snapshot and listing resolve once, and
+      // each lookup's filter prunes the files by their Bloom filters
+      val docs = MultiStore.read(spark, root, "docs")
+      val lookups = keys.map { k =>
+        val hit    = docs.filter(col("doc_id") === k)
+        val opened = MultiStore.scannedFiles(hit)
+        require(opened <= 2,
+          s"bloom index failed to skip: doc_id=$k opened $opened of 16 files")
+        hit
+      }
       lookups.reduce(_.unionByName(_)).orderBy("doc_id")
     }
   }
@@ -596,7 +598,7 @@ object SnapshotQueries {
     * min/max, guarded in-row; (4) time travel back to the pre-fold manifest proving
     * the fragmented per-batch view is still a readable snapshot (its row
     * count rides the output as `n_rows`); (5) the final answer served
-    * through `readPruned` over the compacted layout, so the oracle checks
+    * through a range filter over the compacted layout, so the oracle checks
     * content survived ingest → fold → rewrite → pruned read bit for bit.
     * At 100 TB: the fold+OPTIMIZE cost is one pass over the accumulated
     * verdicts (data that had to be written once anyway), and retention
@@ -642,7 +644,8 @@ object SnapshotQueries {
         .map(MultiStore.readAt(spark, root, _, preM)).reduce(_ unionByName _)
         .agg(count(lit(1)).as("n_rows"))
       // (5) serve the range query pruned by the compacted layout's footers
-      MultiStore.readPruned(spark, root, "flags", "doc_id", lit(100L), lit(399L))
+      MultiStore.read(spark, root, "flags")
+        .filter(col("doc_id") >= 100L && col("doc_id") <= 399L)
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("chars"))
         .crossJoin(travel)

@@ -3,10 +3,14 @@ package graft.sources
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.sources
 import org.apache.spark.sql.types.StructType
 
 /** Multi-table snapshot commits over immutable parquet store versions —
@@ -52,10 +56,15 @@ import org.apache.spark.sql.types.StructType
   *
   * Metadata stays on the driver, in the parquet footers the data files
   * already carry: the manifest, each opened version's schema, the row
-  * count of a delete set, the file pruning of range and Bloom reads (footer
-  * min/max and native Bloom filters, see [[readPrunedRanges]]) and the txn
-  * marker resolve without a Spark job, and no sidecar repeats what a
-  * footer holds. Only row data (scans, writes) runs as Spark jobs.
+  * count of a delete set and the txn marker resolve without a Spark job,
+  * and no sidecar repeats what a footer holds. Only row data (scans,
+  * writes) runs as Spark jobs.
+  *
+  * One read path: every read, live, time-travel or merged, scans one
+  * version dir through its [[VersionIndex]], which holds the files the read
+  * listed and prunes them by their footers (min/max and native Bloom
+  * filters) under whatever filter the scan carries. Point, range and Bloom
+  * reads are [[read]] or [[readMerged]] plus an ordinary filter.
   */
 object MultiStore {
 
@@ -78,19 +87,14 @@ object MultiStore {
   private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
                            rootP: org.apache.hadoop.fs.Path, m: Long): Map[String, Long] = {
     val in = fs.open(new org.apache.hadoop.fs.Path(rootP, ManifestPrefix + m))
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val tmp = new Array[Byte](4096)
-      var n   = in.read(tmp)
-      while (n > 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-      new String(buf.toByteArray, "UTF-8").split("\n").iterator
-        .map(_.trim).filter(_.nonEmpty)
-        .map { line =>
-          val i = line.lastIndexOf('=')
-          line.substring(0, i) -> line.substring(i + 1).toLong
-        }
-        .toMap
-    } finally in.close()
+    val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    text.split("\n").iterator
+      .map(_.trim).filter(_.nonEmpty)
+      .map { line =>
+        val i = line.lastIndexOf('=')
+        line.substring(0, i) -> line.substring(i + 1).toLong
+      }
+      .toMap
   }
 
   /** The live snapshot: {store -> version} of the highest manifest, or
@@ -128,49 +132,97 @@ object MultiStore {
       st.isFile && !n.startsWith("_") && !n.startsWith(".")
     }
 
-  /** The one driver-side footer reader: lists the data files of the
-    * version dir `dir` once and opens each at most once, lazily and in
-    * listing order, handing `f` the file, its Spark schema and its open
-    * reader. Every file opens under ONE Hadoop conf, carried by
+  /** The one driver-side footer reader: opens each of `files` at most
+    * once, lazily and in order, handing `f` the file and its open reader.
+    * Every file opens under ONE Hadoop conf, carried by
     * `HadoopReadOptions`: the `ParquetFileReader.open(InputFile)` overload
     * without options builds a fresh `Configuration` per file, which costs
     * more than the footer read itself.
     */
-  private def footers[T](spark: SparkSession, dir: String)(
-      f: (org.apache.hadoop.fs.FileStatus, StructType, ParquetFileReader) => T): Iterator[T] = {
-    val (fs, p)  = hfs(spark, dir)
-    val conf     = spark.sessionState.newHadoopConf()
-    val options  = HadoopReadOptions.builder(conf).build()
-    dataFiles(fs, p).iterator.map { st =>
+  private def footers[T](spark: SparkSession, files: Seq[org.apache.hadoop.fs.FileStatus])(
+      f: (org.apache.hadoop.fs.FileStatus, ParquetFileReader) => T): Iterator[T] = {
+    val conf    = spark.sessionState.newHadoopConf()
+    val options = HadoopReadOptions.builder(conf).build()
+    files.iterator.map { st =>
       val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf), options)
-      try f(st, GraftParquetBridge.schema(spark, st.getPath, reader), reader)
+      try f(st, reader)
       finally reader.close()
     }
   }
 
-  /** Every parquet scan in this module: `paths` read under a footer-read
-    * `schema`, so Spark runs no schema-inference job.
+  /** The file index of every MultiStore read: the data files of one store
+    * version, as [[open]] listed them, so Spark never lists the dir again.
+    * `listFiles` keeps a file when parquet's row-group test keeps one of its
+    * row groups under the scan's data filters, read from its footer on the
+    * driver ([[GraftParquetBridge.mayMatch]]); with no filter it keeps every
+    * file without opening one. Spark's reader runs the same test in each
+    * scan task, so pruning only drops files whose row groups the scan would
+    * skip anyway. `inputFiles` names the whole version, which is what
+    * [[readVersions]] pins a write to. Equal by version dir alone, as
+    * Spark's `InMemoryFileIndex` is equal by its root paths: a version
+    * never changes, so two reads of it are one relation to `.cache()` and
+    * to exchange reuse.
     */
-  private def scan(spark: SparkSession, schema: StructType, paths: String*): DataFrame =
-    spark.read.schema(schema).parquet(paths: _*)
+  private case class VersionIndex(dir: org.apache.hadoop.fs.Path)(
+      spark: SparkSession, files: Seq[org.apache.hadoop.fs.FileStatus]) extends FileIndex {
+    override def rootPaths: Seq[org.apache.hadoop.fs.Path] = Seq(dir)
+    override def listFiles(partitionFilters: Seq[Expression],
+                           dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+      val kept =
+        if (dataFilters.isEmpty) files
+        else footers(spark, files)((st, reader) =>
+          st -> GraftParquetBridge.mayMatch(spark, reader, dataFilters))
+          .collect { case (st, true) => st }.toSeq
+      Seq(PartitionDirectory(InternalRow.empty, kept.toArray))
+    }
+    override def inputFiles: Array[String] = files.map(_.getPath.toUri.toString).toArray
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = files.map(_.getLen).sum
+    override def partitionSchema: StructType = new StructType()
+  }
 
-  /** A version dir read whole, its schema from the first footer. All files
-    * of a version come from one write, so one footer speaks for all of
-    * them. Every dir this module writes holds a footer (an empty write
-    * still leaves one schema-only file), so there is no fallback to
+  /** A version dir read whole, and the data files it listed: one listing,
+    * the schema from the first footer, the scan through the files'
+    * [[VersionIndex]], so Spark neither infers a schema nor lists again.
+    * All files of a version come from one write, so one footer speaks for
+    * all of them. Every dir this module writes holds a footer (an empty
+    * write still leaves one schema-only file), so there is no fallback to
     * inference.
     */
-  private def open(spark: SparkSession, dir: String): DataFrame =
-    scan(spark, footers(spark, dir)((_, schema, _) => schema).nextOption().getOrElse(
-      throw new IllegalStateException(s"MultiStore: $dir holds no parquet data file")), dir)
+  private def open(spark: SparkSession,
+                   dir: String): (DataFrame, Seq[org.apache.hadoop.fs.FileStatus]) = {
+    val (fs, p) = hfs(spark, dir)
+    val files   = dataFiles(fs, p)
+    val schema  = footers(spark, files.take(1))((st, r) => GraftParquetBridge.schema(spark, st.getPath, r))
+      .nextOption().getOrElse(
+        throw new IllegalStateException(s"MultiStore: $dir holds no parquet data file"))
+    val index   = VersionIndex(fs.makeQualified(p))(spark, files)
+    (GraftParquetBridge.relation(spark, index, schema), files)
+  }
 
   private def readIn(spark: SparkSession, root: String, snap: Map[String, Long],
                      store: String): DataFrame =
-    open(spark, versionDir(root, store, version(root, snap, store)))
+    open(spark, versionDir(root, store, version(root, snap, store)))._1
 
-  /** Read one store at the live snapshot. */
+  /** Read one store at the live snapshot. A filter on the result prunes
+    * the version's files by their footers (see [[VersionIndex]]): point,
+    * range and Bloom reads are this read plus an ordinary filter. Building
+    * it lists the version dir once, reads one footer and runs no Spark job.
+    */
   def read(spark: SparkSession, root: String, store: String): DataFrame =
     readIn(spark, root, snapshot(spark, root), store)
+
+  /** The data files a frame's file scans read once pruned: over every scan
+    * in its executed plan, the files its index kept. Planning the frame
+    * prunes; collecting the same frame afterwards reuses that listing.
+    * `Dataset.inputFiles` instead names every file of each version read.
+    */
+  def scannedFiles(df: DataFrame): Long =
+    PlanWalk.collect(df.queryExecution.executedPlan) {
+      case s: FileSourceScanExec => s.selectedPartitions.totalNumberOfFiles
+    }.sum
+
+  private object PlanWalk extends AdaptiveSparkPlanHelper
 
   /** Retained manifest numbers, ascending — the snapshot HISTORY. Each is
     * a complete, immutable, readable snapshot until pruning drops it
@@ -280,13 +332,9 @@ object MultiStore {
                        store: String): DataFrame = {
     val data = readIn(spark, root, snap, store)
     snap.get(deletesStore(store)).fold(data) { v =>
-      val dir   = versionDir(root, deletesStore(store), v)
-      val files = footers(spark, dir)((_, schema, reader) => (schema, reader.getRecordCount)).toSeq
-      if (files.map(_._2).sum == 0L) data
-      else {
-        val del = scan(spark, files.head._1, dir)
-        data.join(del, del.columns.toSeq, "left_anti")
-      }
+      val (del, files) = open(spark, versionDir(root, deletesStore(store), v))
+      if (footers(spark, files)((_, r) => r.getRecordCount).sum == 0L) data
+      else data.join(del, del.columns.toSeq, "left_anti")
     }
   }
 
@@ -431,101 +479,24 @@ object MultiStore {
     }
   }
 
-  // ---- file pruning from footers: ranges and Bloom point lookups -----------
+  // ---- range and Bloom reads: kept only for the benchmark driver ----------
 
-  /** Range read that opens ONLY the files whose footer min/max for `c` may
-    * intersect `[lo, hi]`: file skipping from the statistics every parquet
-    * footer already records for every column, so it works on any version,
-    * however it was committed. The residual predicate is still applied
-    * (footer ranges are a superset); on a range-clustered table (writer
-    * used `repartitionByRange(c)`) the skip rate approaches the
-    * selectivity. The file list is resolved on the driver (see
-    * [[readPrunedRanges]]): building the frame runs no Spark job, and
-    * collecting it runs one.
+  /** [[read]] filtered to `lo <= c <= hi`: the footer min/max of `c` prune
+    * the files, as for any filter on a read. On a range-clustered version
+    * (writer used `repartitionByRange(c)`) the skip rate approaches the
+    * selectivity.
     */
   def readPruned(spark: SparkSession, root: String, store: String,
                  c: String, lo: Column, hi: Column): DataFrame =
-    readPrunedRanges(spark, root, store, Seq((c, lo, hi)))
+    read(spark, root, store).filter(col(c) >= lo && col(c) <= hi)
 
-  /** Conjunctive multi-column range pruning: a file survives only if EVERY
-    * range may intersect its footer min/max. Pairs naturally with a
-    * Z-ordered writer (`LayoutOps.clusterByZ` interleaves the dimensions,
-    * so each file's per-column min/max boxes are tight in all of them
-    * simultaneously) — the footers turn the Z-layout into genuine
-    * multi-dimensional file skipping, the Delta/Iceberg `ZORDER BY` + stats
-    * combination.
-    *
-    * The pruning is Spark's own row-group test, run on the driver: the
-    * predicate goes through the optimizer and Spark's Catalyst-to-parquet
-    * translation (`ParquetFilters`), and a file is kept if parquet's
-    * `RowGroupFilter` keeps at least one of its row groups
-    * ([[GraftParquetBridge.mayMatch]]). Spark's reader applies the same
-    * test to every row group inside the scan task, so pruning only drops
-    * files whose row groups the scan would skip anyway. A predicate or type
-    * the translation does not cover keeps every file. A read that keeps no
-    * file is a schema-only local frame with no input files, which collects
-    * without a Spark job.
-    */
-  def readPrunedRanges(spark: SparkSession, root: String, store: String,
-                       ranges: Seq[(String, Column, Column)]): DataFrame = {
-    require(ranges.nonEmpty, "readPrunedRanges: at least one range")
-    val pred = ranges.map { case (c, lo, hi) => col(c) >= lo && col(c) <= hi }.reduce(_ && _)
-    prunedScans(spark, root, store, Seq(pred)).head
-  }
-
-  /** Equality (point-lookup) read that opens ONLY the files whose footer
-    * min/max and native parquet Bloom filter for `c` may contain `value` —
-    * the Delta "bloom filter index" path for high-cardinality columns where
-    * min/max ranges are useless (a hash-distributed id intersects every
-    * file's range, but lands in ~one file's Bloom filter). The filters are
-    * the ones [[commit]] writes for its `bloom` columns; a file without one
-    * is pruned by min/max alone. The probe is cast as Spark's filter casts
-    * it, so an INT probe against a BIGINT column hashes as a BIGINT. False
-    * positives are stripped by the residual equality filter, so the result
-    * equals the plain filter by construction; a NULL probe matches no row.
-    * Pruning runs as in [[readPrunedRanges]]: no Spark job to build, one to
-    * collect a hit, none to collect a miss.
+  /** [[read]] filtered to `c = value`: the footer min/max and the native
+    * parquet Bloom filters [[commit]] writes for its `bloom` columns prune
+    * the files, as for any equality filter on a read.
     */
   def readPrunedEq(spark: SparkSession, root: String, store: String,
                    c: String, value: Column): DataFrame =
-    readPrunedEqMulti(spark, root, store, c, Seq(value)).head
-
-  /** Batched point lookup: [[readPrunedEq]] for several probe values of
-    * the SAME column against the SAME live version, returning one pruned
-    * frame per value (order preserved). The snapshot, the listing and each
-    * file's footer are read ONCE for the whole batch instead of once per
-    * key. Per-key semantics are unchanged: each returned frame opens only
-    * the files that may contain its value, with the residual equality
-    * filter on top.
-    */
-  def readPrunedEqMulti(spark: SparkSession, root: String, store: String,
-                        c: String, values: Seq[Column]): Seq[DataFrame] =
-    prunedScans(spark, root, store, values.map(col(c) === _))
-
-  /** One pruned scan per predicate over `store`'s live version, from one
-    * pass over its footers. Each predicate is translated once per schema
-    * (one optimizer run; all files of a version come from one write, so
-    * once) and tested against every file.
-    */
-  private def prunedScans(spark: SparkSession, root: String, store: String,
-                          preds: Seq[Column]): Seq[DataFrame] = {
-    val dir    = versionDir(root, store, version(root, snapshot(spark, root), store))
-    val pushed = scala.collection.mutable.Map.empty[StructType, Seq[Option[Seq[sources.Filter]]]]
-    val files  = footers(spark, dir) { (st, schema, reader) =>
-      val filters = pushed.getOrElseUpdate(schema,
-        preds.map(GraftParquetBridge.pushedFilters(spark, schema, _)))
-      (st.getPath.toString, schema,
-        filters.map(_.exists(GraftParquetBridge.mayMatch(spark, reader, _))))
-    }.toSeq
-    val schema = files.headOption.map(_._2).getOrElse(
-      throw new IllegalStateException(s"MultiStore: $dir holds no parquet data file"))
-    preds.zipWithIndex.map { case (pred, i) =>
-      files.collect { case (f, _, keep) if keep(i) => f } match {
-        case Seq() => spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-        case kept  => scan(spark, schema, kept: _*).filter(pred)
-      }
-    }
-  }
+    read(spark, root, store).filter(col(c) === value)
 
   // ---- OPTIMIZE (bin-packing compaction) -----------------------------------
 
@@ -620,10 +591,10 @@ object MultiStore {
     * filter (writer options `parquet.bloom.filter.enabled#<c>` and
     * `parquet.bloom.filter.expected.ndv#<c>`, sized by
     * [[BloomExpectedItems]]), stored in each data file beside its footer,
-    * where [[readPrunedEq]] reads it. `stats` writes nothing: every parquet
-    * footer already records min/max for every column, which is what
-    * [[readPrunedRanges]] prunes by. A commit writes its data files and
-    * the manifest, and no sidecar.
+    * where a read's equality filter consults it ([[VersionIndex]]). `stats`
+    * writes nothing: every parquet footer already records min/max for
+    * every column, which is what a read's filters prune by. A commit writes
+    * its data files and the manifest, and no sidecar.
     */
   def commit(root: String, writes: Map[String, DataFrame], keep: Int = 2,
              pruneGraceMs: Long = DefaultPruneGraceMs,

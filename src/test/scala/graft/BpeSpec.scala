@@ -59,6 +59,16 @@ class BpeSpec extends SparkSpec {
     assert(res.toSeq === referenceTrain(texts, 12)._1)
   }
 
+  test("bpeMerges runs no job after the last round's merge rule is known") {
+    // the vocab's checkpoint (2 jobs), then per round the top-pair collect
+    // (2 jobs) and, on every round but the last, whose merge nothing reads,
+    // the merged vocab's localCheckpoint (1 job): 2 + 3 * 2 + 2 * 1
+    import spark.implicits._
+    val docs = Seq("low lower lowest", "newer wider new", "slow slower").toDF("text")
+    val jobs = jobsOf(Curation.bpeMerges(docs, "text", 3))
+    assert(jobs == 10, s"bpeMerges(k = 3) ran $jobs jobs")
+  }
+
   test("a word fully merged to one symbol stops contributing pairs, not the training") {
     // "in" fully merges at round 1 (i+n, count 4) and from then on is a
     // single-symbol word: sequence(1, size-1) would be the DESCENDING

@@ -209,7 +209,7 @@ class MultiStoreSpec extends SparkSpec {
       data.as[(Long, Long)].collect().toSet)
     // the rewritten footers serve a pruned read over the clustered layout
     val pruned = MultiStore.readPruned(spark, r, "t", "id", lit(0L), lit(99L))
-    assert(pruned.inputFiles.length == 1)
+    assert(MultiStore.scannedFiles(pruned) == 1)
     assert(pruned.count() == 100L)
     // the fragmented version remains a readable snapshot until retention
     assert(MultiStore.readAt(spark, r, "t", preOpt).count() == 1000L)
@@ -244,13 +244,14 @@ class MultiStoreSpec extends SparkSpec {
     val total = MultiStore.read(spark, r, "t").inputFiles.length
     assert(total == 8)
     Seq(3L, 250L, 777L).foreach { k =>
-      val hit = MultiStore.readPrunedEq(spark, r, "t", "id", lit(k))
-      assert(hit.inputFiles.length <= 2, s"key $k opened ${hit.inputFiles.length} of $total")
+      val hit    = MultiStore.readPrunedEq(spark, r, "t", "id", lit(k))
+      val opened = MultiStore.scannedFiles(hit)
+      assert(opened <= 2, s"key $k opened $opened of $total")
       assert(hit.as[Long].collect().toSeq == Seq(k))
     }
     // an absent key: the sketches reject it without opening ANY data file
     val miss = MultiStore.readPrunedEq(spark, r, "t", "id", lit(123456L))
-    assert(miss.inputFiles.isEmpty && miss.count() == 0L)
+    assert(MultiStore.scannedFiles(miss) == 0 && miss.count() == 0L)
     // a probe whose LITERAL type differs from the stored column (INT 250
     // vs BIGINT id) must still hit: xxhash64 is type-sensitive, and an
     // uncast probe would bloom-false-NEGATIVE — zero files opened, rows
@@ -260,23 +261,59 @@ class MultiStoreSpec extends SparkSpec {
     assert(intProbe.as[Long].collect().toSeq == Seq(250L))
   }
 
-  test("readPrunedEqMulti equals per-key readPrunedEq: same files opened, same rows") {
+  test("one read serves many point lookups, each pruned as readPrunedEq prunes") {
+    import org.apache.spark.sql.functions.col
     val r = root()
     val data = spark.range(0, 800).toDF("id")
     MultiStore.commit(r, Map("t" -> data.repartition(8, expr("id * 2654435761 % 997"))),
       bloom = Map("t" -> Seq("id")))
     val keys = Seq(3L, 250L, 777L, 123456L) // three hits + one bloom miss
-    val multi = MultiStore.readPrunedEqMulti(spark, r, "t", "id", keys.map(lit(_)))
-    assert(multi.size == keys.size)
-    keys.zip(multi).foreach { case (k, m) =>
+    val t    = MultiStore.read(spark, r, "t")
+    keys.foreach { k =>
+      val shared = t.filter(col("id") === k)
       val single = MultiStore.readPrunedEq(spark, r, "t", "id", lit(k))
-      assert(m.inputFiles.sorted.toSeq == single.inputFiles.sorted.toSeq,
-        s"key $k: batched lookup pruned a different file set")
-      assert(m.as[Long].collect().toSeq == single.as[Long].collect().toSeq)
+      assert(MultiStore.scannedFiles(shared) == MultiStore.scannedFiles(single),
+        s"key $k: the shared read pruned a different file count")
+      assert(shared.as[Long].collect().toSeq == single.as[Long].collect().toSeq)
     }
-    // the type-cast contract holds per batched probe too (INT vs BIGINT)
-    val intProbe = MultiStore.readPrunedEqMulti(spark, r, "t", "id", Seq(lit(250))).head
-    assert(intProbe.as[Long].collect().toSeq == Seq(250L))
+    // the type-cast contract holds on the shared read too (INT vs BIGINT)
+    assert(t.filter(col("id") === lit(250)).as[Long].collect().toSeq == Seq(250L))
+  }
+
+  test("a readMerged point read scans only the files whose footers may hold the key") {
+    import org.apache.spark.sql.functions.col
+    val r = root()
+    // range-clustered: each of the 8 files owns a 100-id slice
+    MultiStore.commit(r, Map("t" -> spark.range(0, 800).toDF("id").repartitionByRange(8, col("id"))))
+    assert(MultiStore.read(spark, r, "t").inputFiles.length == 8)
+    Seq(0L, 333L, 799L).foreach { k =>
+      val point  = MultiStore.readMerged(spark, r, "t").filter(col("id") === k)
+      val opened = MultiStore.scannedFiles(point)
+      assert(opened == 1, s"key $k scanned $opened of 8 files")
+      assert(point.as[Long].collect().toSeq == Seq(k))
+    }
+    // the same read over a non-empty delete set still answers exactly
+    MultiStore.deleteWhere(spark, r, "t", col("id") === 333L, Seq("id"))
+    assert(MultiStore.readMerged(spark, r, "t").filter(col("id") === 333L).count() == 0L)
+    assert(MultiStore.readMerged(spark, r, "t").filter(col("id") === 334L)
+      .as[Long].collect().toSeq == Seq(334L))
+  }
+
+  test("two reads of one version are one relation: the second hits the first's cache") {
+    import org.apache.spark.storage.StorageLevel
+    val r = root()
+    MultiStore.commit(r, Map("t" -> spark.range(0, 100).toDF("id").repartition(4)))
+    val first = MultiStore.read(spark, r, "t").cache()
+    try {
+      assert(first.count() == 100L)
+      val second = MultiStore.read(spark, r, "t")
+      assert(second.storageLevel == first.storageLevel && second.storageLevel != StorageLevel.NONE)
+      assert(second.queryExecution.withCachedData.exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation]))
+      // a new version is a new relation
+      MultiStore.commit(r, Map("t" -> spark.range(0, 50).toDF("id")))
+      assert(MultiStore.read(spark, r, "t").storageLevel == StorageLevel.NONE)
+    } finally first.unpersist()
   }
 
   test("an in-flight write BELOW a later-published version survives a default-grace prune") {
@@ -434,7 +471,7 @@ class MultiStoreSpec extends SparkSpec {
     assert(nFiles == 8, s"expected 8 data files, got $nFiles")
     // a narrow range must open strictly fewer files than the table has
     val pruned = MultiStore.readPruned(spark, r, "t", "id", lit(10L), lit(20L))
-    val opened = pruned.inputFiles.length
+    val opened = MultiStore.scannedFiles(pruned)
     assert(opened < nFiles, s"no file skipping: opened $opened of $nFiles")
     // and the result equals the plain filter (pruning is a superset + residual)
     val expected = MultiStore.read(spark, r, "t")
@@ -443,7 +480,7 @@ class MultiStoreSpec extends SparkSpec {
     assert(pruned.as[(Long, String)].collect().toSet == expected)
     // a disjoint range returns empty with the data schema, zero files opened
     val none = MultiStore.readPruned(spark, r, "t", "id", lit(1000L), lit(2000L))
-    assert(none.inputFiles.isEmpty)
+    assert(MultiStore.scannedFiles(none) == 0)
     assert(none.count() == 0L)
     assert(none.columns.toSeq == Seq("id", "payload"))
     // the footers are the only stats: no stats_v=/bloom_v= entry is ever
@@ -563,16 +600,15 @@ class MultiStoreSpec extends SparkSpec {
     MultiStore.commit(r, Map("g" -> data))
     val total = MultiStore.read(spark, r, "g").inputFiles.length
     assert(total == 16)
-    val pruned = MultiStore.readPrunedRanges(spark, r, "g",
-      Seq(("x", lit(4L), lit(7L)), ("y", lit(4L), lit(7L))))
-    val opened = pruned.inputFiles.length
+    val xRange = col("x") >= 4L && col("x") <= 7L
+    val pruned = MultiStore.read(spark, r, "g").filter(xRange && col("y") >= 4L && col("y") <= 7L)
+    val opened = MultiStore.scannedFiles(pruned)
     assert(opened < 4, s"2-D skip too weak: opened $opened of $total files")
     assert(pruned.count() == 16L) // the 4x4 window
     // single-dimension pruning alone cannot reach that skip rate on this
     // layout — the second range is what cuts the candidate set down
-    val oneDim = MultiStore.readPrunedRanges(spark, r, "g",
-      Seq(("x", lit(4L), lit(7L))))
-    assert(oneDim.inputFiles.length > opened,
+    val oneDim = MultiStore.read(spark, r, "g").filter(xRange)
+    assert(MultiStore.scannedFiles(oneDim) > opened,
       "adding the y-range must strictly tighten the file set")
   }
 
@@ -582,13 +618,13 @@ class MultiStoreSpec extends SparkSpec {
     val grid = for (x <- 0L until 16L; y <- 0L until 16L) yield (x, y, x * 16 + y)
     MultiStore.commit(r, Map("g" ->
       grid.toDF("x", "y", "payload").repartition(16, expr("payload"))))
-    val ranges = Seq(("x", lit(4L), lit(7L)), ("y", lit(4L), lit(7L)))
-    val before = MultiStore.readPrunedRanges(spark, r, "g", ranges).inputFiles.length
+    val box    = expr("x BETWEEN 4 AND 7 AND y BETWEEN 4 AND 7")
+    val before = MultiStore.scannedFiles(MultiStore.read(spark, r, "g").filter(box))
     assert(before > 8, s"scattered layout should defeat zone maps, opened only $before")
     LayoutOps.optimizeZorder(spark, r, "g", targetFiles = 16, Seq("x", "y"), bits = 4)
-    val pruned = MultiStore.readPrunedRanges(spark, r, "g", ranges)
-    assert(pruned.inputFiles.length < 4,
-      s"z-order skip too weak: opened ${pruned.inputFiles.length} of 16")
+    val pruned = MultiStore.read(spark, r, "g").filter(box)
+    val opened = MultiStore.scannedFiles(pruned)
+    assert(opened < 4, s"z-order skip too weak: opened $opened of 16")
     assert(pruned.count() == 16L) // the 4x4 window, rows exact
     // an OPTIMIZE racing a data commit must lose loudly, not clobber it
     val vNow = MultiStore.snapshot(spark, r)("g")
@@ -683,7 +719,8 @@ class MultiStoreSpec extends SparkSpec {
     // the compacted layout's footers actually skip: a narrow range opens 1 of 2 files
     val hit = MultiStore.readPruned(spark, r, "flags", "k", lit(0L), lit(10L))
     assert(hit.as[(Long, String)].collect().toSet == rows.filter(_._1 <= 10).toSet)
-    assert(hit.inputFiles.length == 1, s"zone maps did not skip: ${hit.inputFiles.length} of 2")
+    assert(MultiStore.scannedFiles(hit) == 1,
+      s"zone maps did not skip: ${MultiStore.scannedFiles(hit)} of 2")
   }
 
   test("readMerged resolves data and delete set from one manifest: a racing compactDeletes never resurrects a deleted row") {
@@ -780,64 +817,48 @@ class MultiStoreSpec extends SparkSpec {
 
   test("opening a version runs no Spark job: schema, manifest and probe hash resolve on the driver") {
     // building a read runs no job; collecting a point read over an empty
-    // delete set, a range read or a Bloom hit runs exactly one, a miss none
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // delete set, a range read or a Bloom hit runs exactly one; a read that
+    // keeps no file runs no task
     import org.apache.spark.sql.functions.col
     val r = root()
     MultiStore.commit(r, Map("t" -> spark.range(0, 200).toDF("id").repartition(4)),
       bloom = Map("t" -> Seq("id")))
     MultiStore.deleteWhere(spark, r, "t", col("id") < 5L, Seq("id"))
-    val m  = MultiStore.manifests(spark, r).last
-    val sc = spark.sparkContext
-    // count only this thread's jobs: they carry its job group
-    val group = s"multistore-jobs-${java.util.UUID.randomUUID()}"
-    val jobs  = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    def jobsOf(body: => Any): Int = {
-      org.apache.spark.GraftListenerBridge.flush(sc)
-      jobs.set(0)
-      sc.setJobGroup(group, "MultiStoreSpec job count")
-      try body finally sc.clearJobGroup()
-      org.apache.spark.GraftListenerBridge.flush(sc)
-      jobs.get()
-    }
-    sc.addSparkListener(listener)
-    try {
-      // frames are only built, never collected: the listing, footers,
-      // delete-set row count and file pruning all resolve on the driver
-      assert(jobsOf(MultiStore.read(spark, r, "t")) == 0)
-      assert(jobsOf(MultiStore.readAt(spark, r, "t", m)) == 0)
-      assert(jobsOf(MultiStore.readMerged(spark, r, "t")) == 0)
-      assert(jobsOf(MultiStore.readMergedAt(spark, r, "t", m)) == 0)
-      assert(jobsOf(MultiStore.readPruned(spark, r, "t", "id", lit(10L), lit(20L))) == 0)
-      assert(jobsOf(MultiStore.readPrunedRanges(spark, r, "t",
-        Seq(("id", lit(10L), lit(20L))))) == 0)
-      assert(jobsOf(MultiStore.readPrunedEq(spark, r, "t", "id", lit(42L))) == 0)
-      assert(jobsOf(MultiStore.readPrunedEqMulti(spark, r, "t", "id", Seq(lit(42L), lit(7L)))) == 0)
-      // collected: each read is one scan job
-      def point() = MultiStore.readMerged(spark, r, "t").filter(col("id") === 42L).collect()
-      assert(jobsOf(MultiStore.readPruned(spark, r, "t", "id", lit(10L), lit(20L)).collect()) == 1)
-      assert(jobsOf(MultiStore.readPrunedEq(spark, r, "t", "id", lit(42L)).collect()) == 1)
-      // a non-empty delete set adds the anti-join's broadcast job
-      assert(jobsOf(point()) == 2)
-      // a miss keeps no file: a local frame that collects without a job
-      val miss = MultiStore.readPrunedEq(spark, r, "t", "id", lit(123456L))
-      assert(miss.inputFiles.isEmpty)
-      assert(jobsOf(miss.collect()) == 0)
-      val disjoint = MultiStore.readPruned(spark, r, "t", "id", lit(1000L), lit(2000L))
-      assert(disjoint.inputFiles.isEmpty)
-      assert(jobsOf(disjoint.collect()) == 0)
-      // the empty delete set compactDeletes resets to is never joined
-      MultiStore.compactDeletes(spark, r, "t")
-      assert(jobsOf(point()) == 1)
-      assert(point().map(_.getLong(0)).toSeq == Seq(42L))
-      // the counter does see jobs
-      assert(jobsOf(MultiStore.read(spark, r, "t").collect()) >= 1)
-    } finally sc.removeSparkListener(listener)
+    val m = MultiStore.manifests(spark, r).last
+    // frames are only built, never collected: the listing, footers and
+    // delete-set row count all resolve on the driver
+    assert(jobsOf(MultiStore.read(spark, r, "t")) == 0)
+    assert(jobsOf(MultiStore.readAt(spark, r, "t", m)) == 0)
+    assert(jobsOf(MultiStore.readMerged(spark, r, "t")) == 0)
+    assert(jobsOf(MultiStore.readMergedAt(spark, r, "t", m)) == 0)
+    assert(jobsOf(MultiStore.readPruned(spark, r, "t", "id", lit(10L), lit(20L))) == 0)
+    assert(jobsOf(MultiStore.readPrunedEq(spark, r, "t", "id", lit(42L))) == 0)
+    // planning prunes the files on the driver, still without a job
+    assert(jobsOf(MultiStore.scannedFiles(
+      MultiStore.readMerged(spark, r, "t").filter(col("id") === 42L))) == 0)
+    // collected: each read is one scan job
+    def point() = MultiStore.readMerged(spark, r, "t").filter(col("id") === 42L).collect()
+    assert(jobsOf(MultiStore.readPruned(spark, r, "t", "id", lit(10L), lit(20L)).collect()) == 1)
+    assert(jobsOf(MultiStore.readPrunedEq(spark, r, "t", "id", lit(42L)).collect()) == 1)
+    // a non-empty delete set adds the anti-join's broadcast job
+    assert(jobsOf(point()) == 2)
+    // a read that keeps no file scans none: Spark still posts one job for
+    // the empty scan, with no task
+    val miss = MultiStore.readPrunedEq(spark, r, "t", "id", lit(123456L))
+    assert(MultiStore.scannedFiles(miss) == 0)
+    assert(jobsAndTasks(miss.collect())._2 == 0)
+    val disjoint = MultiStore.readPruned(spark, r, "t", "id", lit(1000L), lit(2000L))
+    assert(MultiStore.scannedFiles(disjoint) == 0)
+    assert(jobsAndTasks(disjoint.collect())._2 == 0)
+    // a NULL probe matches nothing: the optimizer drops the scan
+    val nullProbe = MultiStore.readPrunedEq(spark, r, "t", "id", lit(null))
+    assert(jobsOf(assert(nullProbe.collect().isEmpty)) == 0)
+    // the empty delete set compactDeletes resets to is never joined
+    MultiStore.compactDeletes(spark, r, "t")
+    assert(jobsOf(point()) == 1)
+    assert(point().map(_.getLong(0)).toSeq == Seq(42L))
+    // the counter does see jobs
+    assert(jobsOf(MultiStore.read(spark, r, "t").collect()) >= 1)
   }
 
   test("a footer-read schema equals Spark's inferred one for every type, the empty reset delete set included") {
@@ -961,19 +982,23 @@ class MultiStoreSpec extends SparkSpec {
         .select(col("*"), col("_metadata.file_name").as("file"))
       st -> spark.createDataFrame(withFile.collect().toSeq.asJava, withFile.schema)
     }.toMap
-    def name(f: String) = new org.apache.hadoop.fs.Path(f).getName
+    // a delete set on every store, so readMerged plans its anti-join
+    val deleted = col("id") % 13 === 5
+    stores.foreach(st => MultiStore.deleteWhere(spark, r, st, deleted, Seq("id")))
+    val nFiles = stores.map(st => st -> MultiStore.read(spark, r, st).inputFiles.length).toMap
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.select("id").collect().map(_.getLong(0)).toSeq.sorted
-    var prunedFiles = 0
-    def check(st: String, pred: Column, read: org.apache.spark.sql.DataFrame): Boolean = {
-      val truth     = local(st).filter(pred)
-      val opened    = read.inputFiles.map(name).toSet
-      val needed    = truth.select("file").collect().map(_.getString(0)).toSet
-      val all       = local(st).select("file").distinct().collect().map(_.getString(0)).toSet
-      prunedFiles += (all -- opened).size
-      val ok = ids(read) == ids(truth) &&
-        ids(MultiStore.read(spark, r, st).filter(pred)) == ids(truth) && needed.subsetOf(opened)
-      if (!ok) println(s"$st $pred: opened $opened, needed $needed, " +
+    var prunedFiles = 0L
+    def check(st: String, pred: Column): Boolean = {
+      val truth   = local(st).filter(pred)
+      val read    = MultiStore.read(spark, r, st).filter(pred)
+      val merged  = MultiStore.readMerged(spark, r, st).filter(pred)
+      val opened  = MultiStore.scannedFiles(read)
+      val needed  = truth.select("file").distinct().count()
+      prunedFiles += nFiles(st) - opened
+      val ok = ids(read) == ids(truth) && opened >= needed &&
+        ids(merged) == ids(truth.filter(!deleted))
+      if (!ok) println(s"$st $pred: scanned $opened, needed $needed, " +
         s"got ${ids(read)}, want ${ids(truth)}")
       ok
     }
@@ -996,11 +1021,7 @@ class MultiStoreSpec extends SparkSpec {
     } yield (c, lo, hi, Seq(p1, p2))
     val prop = Prop.forAll(sample) { case (c, lo, hi, probes) =>
       stores.forall { st =>
-        check(st, col(c) >= lo && col(c) <= hi,
-          MultiStore.readPrunedRanges(spark, r, st, Seq((c, lo, hi)))) &&
-          probes.zip(MultiStore.readPrunedEqMulti(spark, r, st, c, probes)).forall {
-            case (p, read) => check(st, col(c) === p, read)
-          }
+        check(st, col(c) >= lo && col(c) <= hi) && probes.forall(p => check(st, col(c) === p))
       }
     }
     val result = Test.check(

@@ -19,6 +19,34 @@ trait SparkSpec extends AnyFunSuite {
 
   def sf0001 = "/root/testdata/sf0.001"
 
+  /** The Spark jobs and tasks `body` runs, counted by a listener that sees
+    * only this call's job group (a job group is inherited by the jobs a
+    * query starts on other threads, such as a broadcast).
+    */
+  def jobsAndTasks(body: => Any): (Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+    val sc          = spark.sparkContext
+    val group       = s"spec-jobs-${java.util.UUID.randomUUID()}"
+    val jobs, tasks = new java.util.concurrent.atomic.AtomicInteger
+    def ours(props: java.util.Properties) =
+      Option(props).exists(_.getProperty("spark.jobGroup.id") == group)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (ours(e.properties)) jobs.incrementAndGet()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (ours(e.properties)) tasks.addAndGet(e.stageInfo.numTasks)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "spec job count")
+      try body finally sc.clearJobGroup()
+      org.apache.spark.GraftListenerBridge.flush(sc)
+      (jobs.get(), tasks.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  def jobsOf(body: => Any): Int = jobsAndTasks(body)._1
+
   /** Temp dir scoped to `body`, deleted afterwards — specs were leaving
     * hundreds of createTempDirectory dirs behind per `sbt test` sweep.
     */

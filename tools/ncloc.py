@@ -4,7 +4,9 @@
 python3 tools/ncloc.py                 per-file counts of src/main, then the total
 python3 tools/ncloc.py --unreferenced  public def/val/object members of src/main whose
     name no other word in src/, perfbench/src or tools/ matches (comments and shell
-    flags stripped, strings kept); [specs only] marks names only src/test uses
+    flags stripped, strings kept); [specs only] marks names only src/test uses.
+    Exits 1 when it lists a name that is neither [specs only] nor an object that
+    defines main (an entry point the JVM calls by name).
 A non-comment line keeps a non-blank character once // and /* */ comments are removed.
 """
 import collections, os, re, sys
@@ -35,18 +37,26 @@ def files(*dirs, ext=('.scala', '.java', '.py', '.sh')):
             yield from (os.path.join(r, f) for f in sorted(fs) if f.endswith(ext))
 
 def members(code):
-    """(line, name) of public defs whose every enclosing brace is an object/class/trait body."""
+    """(line, name, kind) of public defs whose every enclosing brace is an object/class/trait body."""
     stack, stmt, parens = [], '', 0
     for n, line in enumerate(code.split('\n'), 1):
         m = DEF.match(line)
         if m and all(stack) and not re.search(r'private|protected|override', m.group(1) or ''):
-            yield n, m.group(2)
+            yield n, m.group(2), m.group(0).split()[-2]
         stmt = stmt if parens or re.match(r'\s*(extends|with)\b', line) else ''
         for c in line + '\n':
             parens += (c == '(') - (c == ')')
             if c == '{': stack.append(bool(TEMPLATE.match(stmt))); stmt = ''
             elif c == '}': stack = stack[:-1]; stmt = ''
             else: stmt = '' if c == ';' else stmt + c
+
+def body(code, line):
+    """The text of the braced body that opens on or after `line` (1-based)."""
+    start = code.index('{', sum(len(l) + 1 for l in code.split('\n')[:line - 1]))
+    depth, i = 0, start
+    while True:
+        depth += (code[i] == '{') - (code[i] == '}'); i += 1
+        if not depth: return code[start:i]
 
 def main():
     srcs = list(files('src/main', ext=('.scala', '.java')))
@@ -59,10 +69,16 @@ def main():
         src = open(p, encoding='utf-8').read()
         src = strip(src) if p.endswith(('.scala', '.java')) else re.sub(r'(?m)(^|\s)#.*|--?[\w-]+', '', src)
         uses['/src/test/' in p].update(re.findall(r'\w+', src))
-    defs = [(p, n, name) for p in srcs for n, name in members(strip(open(p).read(), False))]
-    ndefs = collections.Counter(name for _, _, name in defs)
-    for p, n, name in defs:
+    code = {p: strip(open(p).read(), False) for p in srcs}
+    defs = [(p, n, name, kind) for p in srcs for n, name, kind in members(code[p])]
+    ndefs = collections.Counter(name for _, _, name, _ in defs)
+    unused = 0
+    for p, n, name, kind in defs:
         if uses[False][name] <= ndefs[name]:  # no word but the definitions themselves
-            print(f'{os.path.relpath(p, ROOT)}:{n}: {name}' + (' [specs only]' * (uses[True][name] > 0)))
+            specs = uses[True][name] > 0
+            entry = kind == 'object' and re.search(r'\bdef\s+main\s*\(', body(code[p], n))
+            unused += not (specs or entry)
+            print(f'{os.path.relpath(p, ROOT)}:{n}: {name}' + (' [specs only]' * specs))
+    sys.exit(1 if unused else 0)
 
 main()

@@ -7,6 +7,14 @@
 set -euo pipefail
 cd "$(git rev-parse --show-toplevel)"
 
+# Nothing in src/main may go uncalled: every public member must be named by
+# some caller, a spec, or be an entry point (an object defining main).
+if ! unreferenced=$(python3 tools/ncloc.py --unreferenced); then
+  printf '%s\n' "$unreferenced" | grep -v '\[specs only\]' >&2 || true
+  echo "[precommit] src/main defines names nothing calls (tools/ncloc.py --unreferenced)" >&2
+  exit 1
+fi
+
 if git diff --cached --name-only | grep -q '^src/main/scala/graft/'; then
   CLASSES=target/scala-2.13/classes
   if [ -f "$CLASSES/graft/tools/CoverageGen.class" ]; then
