@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.internal.StaticSQLConf
 
 /** Library entry point: one place that builds a correctly-configured
-  * session (a codegen cache that holds a curation pass, UTC, AQE,
+  * session (a codegen cache that holds a curation pass, filter keys
+  * bound rather than compiled in, UTC, AQE,
   * 32-way local shuffle, nanos-timestamp events readable, LAST_WIN map
   * merges, custom SQL functions registered via
   * [[GraftExtensions]] — the same builders `spark.sql.extensions=
@@ -20,13 +21,16 @@ object Graft {
   val CodegenCacheEntries: Int = 1000
 
   /** A session builder carrying the static confs every graft JVM runs
-    * with: the codegen cache size ([[CodegenCacheEntries]]). `session`,
-    * `Verify`, `Bench` and the test session all start from it, so tests,
-    * the oracle dump and the benchmark compile the same way.
+    * with: the codegen cache size ([[CodegenCacheEntries]]) and
+    * [[GraftExtensions]] (the SQL functions and the literal-binding rule).
+    * `session`, `Verify`, `Bench` and the test session all start from it,
+    * so tests, the oracle dump and the benchmark plan and compile the same
+    * way.
     */
   def builder(): SparkSession.Builder =
     SparkSession.builder()
       .config(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key, CodegenCacheEntries.toLong)
+      .withExtensions(new GraftExtensions)
 
   /** The engine's session (see the object header for what it sets).
     *
@@ -47,6 +51,25 @@ object Graft {
     *   - the cache key pairs the code with a class loader, so in local
     *     mode the driver thread and the task threads each compile a class
     *     once.
+    *
+    * Filter keys. Spark inlines primitive literals into its generated
+    * Java, so a read with a new key (`event_id = 17664L`, `>= 11792L`)
+    * used to be a new class, compiled on the driver thread and again on a
+    * task thread: two compiles per keyed read, which no cache size helps.
+    * [[graft.plans.BindLiterals]] swaps each non-NULL primitive literal
+    * that a `FilterExec` condition compares against for a
+    * [[graft.plans.BoundLiteral]], whose code reads the value from the
+    * class's `references` array; reads that differ only in their keys
+    * share one class. It is a columnar rule
+    * (`preColumnarTransitions`), not a query-stage prep rule: a scan,
+    * filter and collect plan has no exchange, so adaptive execution does
+    * not wrap it and stage-prep rules never see it, while the columnar
+    * rules run both in the plain preparations and at each adaptive
+    * stage. The leaf's equality is its literal's (value and type), so
+    * exchange reuse never matches two keys (a `.cache()` lookup compares
+    * logical plans, which keep the plain literals), and it prints as the
+    * literal does, so `explain` text is unchanged. Scans keep the plain
+    * literals in their pushed filters.
     */
   def session(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession = {
     val spark = builder()

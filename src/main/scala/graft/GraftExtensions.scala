@@ -4,7 +4,7 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-import graft.plans.{CosineSimilarity, FreqItemsAgg, Int8Dot, SimHashAgg}
+import graft.plans.{BindLiterals, CosineSimilarity, FreqItemsAgg, Int8Dot, SimHashAgg}
 
 /** The cluster deployment surface for graft's custom Catalyst functions:
   * `--conf spark.sql.extensions=graft.GraftExtensions` makes every
@@ -20,15 +20,20 @@ import graft.plans.{CosineSimilarity, FreqItemsAgg, Int8Dot, SimHashAgg}
   *   - int8_dot(a, b)       — codegen'd int8-code dot product (x31)
   *   - simhash_agg(token)   — one-pass SimHash-64 aggregate (x4)
   *   - mg_freq(item, k)     — Misra-Gries heavy hitters, k a literal (x46)
+  *
+  * Physical rule injected: [[graft.plans.BindLiterals]], which binds a
+  * filter's primitive keys so a new key reuses a compiled class.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.builders.foreach { case (name, doc, builder) =>
       ext.injectFunction((
         FunctionIdentifier(name),
         new ExpressionInfo(classOf[GraftExtensions].getName, name, doc),
         builder))
     }
+    ext.injectColumnar(_ => BindLiterals)
+  }
 }
 
 object GraftExtensions {

@@ -425,22 +425,6 @@ object Dedup {
       .groupBy("doc_id")
       .agg(graft.plans.SimHashAgg.simhash_agg(col("tk")).as("simhash"))
 
-  /** The composed-builtins form (64 shift-mask sum columns) kept as the
-    * reference implementation the aggregate is spec-tested against.
-    */
-  def simhashOfBuiltins(docs: DataFrame): DataFrame = {
-    val tok  = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("tk"))
-    val h    = xxhash64(col("tk"))
-    val bits = (0 until 64).map { i =>
-      sum(when(shiftright(h, i).bitwiseAND(1L) === 1L, 1).otherwise(-1)).as(s"b$i")
-    }
-    val fp = (0 until 64)
-      .map(i => when(col(s"b$i") > 0, shiftleft(lit(1L), i)).otherwise(0L))
-      .reduce((a, b) => a.bitwiseOR(b))
-    tok.groupBy("doc_id").agg(bits.head, bits.tail: _*)
-      .select(col("doc_id"), fp.as("simhash"))
-  }
-
   /** SimHash near-dup pairs: band the 64-bit fingerprint into 8 bytes;
     * docs sharing ANY band become candidates (pigeonhole: hamming <= 7
     * guarantees one intact band), then exact hamming via bit_count(xor)

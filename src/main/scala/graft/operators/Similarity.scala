@@ -17,29 +17,15 @@ import graft.Q
   */
 object Similarity {
 
-  /** dot(a, b) in double precision, sequential fold (engine-reproducible). */
-  private def dot(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0),
-      (acc, x) => acc + x)
-
-  private def norm(a: Column): Column = sqrt(dot(a, a))
-
   /** Cosine similarity, rounded to 6dp: double rounding absorbs the
     * engine-side summation-order difference (~1e-15) while preserving
     * ranking granularity. Backed by the codegen'd CosineSimilarity
-    * expression (same sequential-fold semantics as dot/norm above, without
-    * materializing the zip_with product array per comparison).
+    * expression (the same sequential fold as the zip_with + aggregate
+    * form that specs pin it against, without materializing the product
+    * array per comparison).
     */
   def cosine(a: Column, b: Column): Column =
     round(graft.plans.CosineSimilarity.cosine_sim(a, b), 6)
-
-  /** The composed-builtins form (zip_with + aggregate) kept as the
-    * reference implementation the expression is spec-tested against.
-    */
-  def cosineBuiltins(a: Column, b: Column): Column =
-    round(dot(a, b) / (norm(a) * norm(b)), 6)
 
   val x9_cosine_topk = Q(
     "x9_cosine_topk",
@@ -408,15 +394,6 @@ object Similarity {
   def sq8Dot(a: Column, b: Column): Column =
     graft.plans.Int8Dot.int8_dot(a, b)
 
-  /** Composed-builtins reference implementation for the spec cross-check
-    * (cast up per element — byte arithmetic would wrap at 127).
-    */
-  def sq8DotBuiltins(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("long") * y.cast("long")),
-      lit(0L),
-      (acc, x) => acc + x)
-
   /** SQ8 ANN top-k: rank ALL candidates by integer code similarity, rescore
     * only the k winners per query against the float embeddings. `coded` is
     * sq8Codes output (persisted once at ingest, 4x smaller than the
@@ -488,18 +465,6 @@ object Similarity {
         col("query_id"), col("vec_id"), col("qsim"),
         cosine(col("qe"), col("ce")).as("sim"), col("rn"))
       .orderBy("query_id", "rn", "vec_id")
-      .drop("rn")
-  }
-
-  /** Exact brute-force top-k as a reusable API (not just the oracle query). */
-  def bruteForceTopK(embeddings: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-    val c = embeddings.select(col("vec_id"), col("embedding").as("ce"))
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("vec_id"))
-    c.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), cosine(col("qe"), col("ce")).as("sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
       .drop("rn")
   }
 

@@ -1,14 +1,13 @@
 package graft
 
 import graft.operators.{Curation, Dedup, GraphOps, Similarity}
-import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 
 /** A repeated curation pipeline reuses its compiled generated classes:
   * Spark's JVM-wide codegen cache must hold one pass's working set, or
   * every pass evicts the previous pass's classes and Janino compiles them
-  * all again (see [[Graft.session]]). Compiles are counted from Spark's
-  * `CodegenMetrics`, which records one sample per Janino compile.
+  * all again (see [[Graft.session]]). Compiles are counted with
+  * [[SparkSpec.compiles]].
   */
 class CodegenReuseSpec extends SparkSpec {
 
@@ -44,8 +43,6 @@ class CodegenReuseSpec extends SparkSpec {
       .select(col("doc_id"), col("lang"), col("kept_words").as("tokens")),
       Seq("lang"), "tokens", "doc_id", 512).localCheckpoint()
   }
-
-  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   // A repeat is not held to exactly 0: adaptive execution re-plans a query
   // as its shuffle stages finish, and the order they finish in on 4 task

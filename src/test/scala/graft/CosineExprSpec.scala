@@ -20,7 +20,7 @@ class CosineExprSpec extends SparkSpec {
       .select(
         col("vec_id"),
         Similarity.cosine(col("qe"), col("embedding")).as("native"),
-        Similarity.cosineBuiltins(col("qe"), col("embedding")).as("builtins"))
+        Oracles.cosineBuiltins(col("qe"), col("embedding")).as("builtins"))
     assert(both.filter(col("native") =!= col("builtins")).count() == 0)
   }
 

@@ -57,7 +57,7 @@ class DedupSimilaritySpec extends SparkSpec {
   test("SimHashAgg typed aggregate matches the 64-sum-columns form bit-for-bit") {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet").select("doc_id", "text")
     val native   = Dedup.simhashOf(docs).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val builtins = Dedup.simhashOfBuiltins(docs).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val builtins = Oracles.simhashOfBuiltins(docs).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(native == builtins)
     assert(native.size == docs.count())
   }
@@ -95,7 +95,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val queries = emb.filter(col("vec_id") < 10)
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = pairs(Similarity.bruteForceTopK(emb, queries, 5))
+    val exact = pairs(Oracles.bruteForceTopK(emb, queries, 5))
     val ivf   = pairs(Similarity.ivfTopK(emb, queries, 5, nCells = 16, nProbe = 4))
     val recall = (exact & ivf).size.toDouble / exact.size
     assert(recall >= 0.5, s"IVF recall too low: $recall")
@@ -118,7 +118,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val queries = emb.filter(col("vec_id") >= 100 && col("vec_id") < 110)
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = pairs(Similarity.bruteForceTopK(emb, queries, 5))
+    val exact = pairs(Oracles.bruteForceTopK(emb, queries, 5))
     def recall(kmeans: Boolean) = {
       val got = pairs(Similarity.ivfTopK(emb, queries, 5, nCells = 16, nProbe = 4, kmeans = kmeans))
       (exact & got).size.toDouble / exact.size
@@ -200,12 +200,12 @@ class DedupSimilaritySpec extends SparkSpec {
     // zero-norm drop: every surviving row ranks
     assert(coded.filter(col("n2") <= 0).isEmpty)
     // codegen'd Int8Dot === composed-builtins fold on every code row
-    val both = coded.withColumn("n2b", Similarity.sq8DotBuiltins(col("c"), col("c")))
+    val both = coded.withColumn("n2b", Oracles.sq8DotBuiltins(col("c"), col("c")))
     assert(both.filter(col("n2") =!= col("n2b")).isEmpty)
     // quantized ranking finds the true float top-k at high recall
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = pairs(Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 10), 5))
+    val exact = pairs(Oracles.bruteForceTopK(emb, emb.filter(col("vec_id") < 10), 5))
     val sq8   = pairs(Similarity.sq8TopK(coded, col("vec_id") < 10, 5))
     val recall = (exact & sq8).size.toDouble / exact.size
     assert(recall >= 0.9, s"SQ8 recall too low: $recall")
@@ -213,7 +213,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val out = Similarity.x31_sq8_topk.run(spark, sf0001)
       .select("query_id", "vec_id", "sim").collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val ref = Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 10), 40)
+    val ref = Oracles.bruteForceTopK(emb, emb.filter(col("vec_id") < 10), 40)
       .select("query_id", "vec_id", "sim").collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     out.foreach { case (k, v) =>
@@ -250,7 +250,7 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("brute-force top-k: k rows per query, sims sorted desc, no self-match") {
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
-    val out = Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 5), 3).collect()
+    val out = Oracles.bruteForceTopK(emb, emb.filter(col("vec_id") < 5), 3).collect()
     val byQ = out.groupBy(_.getLong(0))
     assert(byQ.size == 5)
     byQ.foreach { case (q, rows) =>

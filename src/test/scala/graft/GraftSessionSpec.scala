@@ -26,4 +26,35 @@ class GraftSessionSpec extends SparkSpec {
     assert(org.apache.spark.sql.internal.SQLConf.get.codegenCacheMaxEntries ==
       Graft.CodegenCacheEntries)
   }
+
+  test("the test session and a Graft.session bind filter keys; registerAll still resolves the functions") {
+    import org.apache.spark.sql.SparkSession
+    assert(spark.sessionState.columnarRules.contains(graft.plans.BindLiterals))
+    // a second session on the same context, built as `Graft.session` builds
+    // one: the builder's extensions apply to every session it creates
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val other = try Graft.session("local[4]", 4) finally {
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+    assert(other ne spark)
+    assert(other.sessionState.columnarRules.contains(graft.plans.BindLiterals))
+    // the builder injects the four functions, and registerAll (which
+    // Graft.session also calls) replaces them with temp functions that
+    // resolve the same way
+    Seq(spark, other).foreach { s =>
+      GraftExtensions.registerAll(s)
+      Seq("cosine_sim", "int8_dot", "simhash_agg", "mg_freq").foreach(f =>
+        assert(s.catalog.functionExists(f), f))
+      val row = s.sql(
+        """SELECT cosine_sim(array(1.0F, 0.0F), array(1.0F, 0.0F)),
+          |       int8_dot(array(1Y, 2Y), array(3Y, 4Y)),
+          |       (SELECT simhash_agg(t) FROM VALUES ('a'), ('b') AS v(t)),
+          |       (SELECT mg_freq(t, 4)['a'] FROM VALUES ('a'), ('a'), ('b') AS v(t))""".stripMargin)
+        .first()
+      assert(row.getDouble(0) == 1.0 && row.getLong(1) == 11L && !row.isNullAt(2) &&
+        row.getLong(3) == 2L, row)
+    }
+  }
 }

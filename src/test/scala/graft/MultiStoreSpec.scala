@@ -861,6 +861,32 @@ class MultiStoreSpec extends SparkSpec {
     assert(jobsOf(MultiStore.read(spark, r, "t").collect()) >= 1)
   }
 
+  test("keyed reads compile nothing new: a new key reuses the class its read kind compiled") {
+    // Spark inlines primitive literals into generated code, so without
+    // graft.plans.BindLiterals each read below is a new class, compiled on
+    // the driver and on a task thread: 2 compiles per read
+    import org.apache.spark.sql.functions.col
+    val r = root()
+    MultiStore.commit(r, Map("t" -> spark.range(0, 2000)
+        .select(col("id"), (col("id") % 97).as("user")).repartition(4)),
+      bloom = Map("t" -> Seq("user")))
+    MultiStore.deleteWhere(spark, r, "t", col("id") < 5L, Seq("id"))
+    def point(k: Long) = MultiStore.readMerged(spark, r, "t").filter(col("id") === k)
+      .select("id", "user").collect()
+    def range(k: Long) = MultiStore.readPruned(spark, r, "t", "id", lit(k), lit(k + 20)).collect()
+    def bloom(k: Long) = MultiStore.readPrunedEq(spark, r, "t", "user", lit(k)).collect()
+    point(1000L); range(1000L); bloom(96L) // warm-up: one class set per kind
+    val before = compiles
+    (1L to 20L).foreach { k =>
+      assert(point(100L + k).map(_.getLong(0)).toSeq == Seq(100L + k))
+      assert(range(7L * k).length == 21)
+      assert(bloom(k).length > 0)
+    }
+    val n = compiles - before
+    info(s"60 keyed reads compiled $n classes")
+    assert(n <= 4, s"60 keyed reads compiled $n classes")
+  }
+
   test("a footer-read schema equals Spark's inferred one for every type, the empty reset delete set included") {
     import java.math.BigDecimal
     import org.apache.spark.sql.Row

@@ -54,7 +54,7 @@ class PqSemdedupSpec extends SparkSpec {
       .select(col("vec_id"), col("cell"), col("embedding"))
     val dup = asn.as("a").join(asn.as("b"),
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id") &&
-          Similarity.cosineBuiltins(col("a.embedding"), col("b.embedding")) >= 0.35)
+          Oracles.cosineBuiltins(col("a.embedding"), col("b.embedding")) >= 0.35)
       .select(col("b.vec_id")).distinct()
       .collect().map(_.getLong(0)).toSet
     val survivors = Similarity.x70_semdedup.run(spark, sf0001)
@@ -73,7 +73,7 @@ class PqSemdedupSpec extends SparkSpec {
     val expect = asn.as("c").join(asn.as("v"),
         col("c.cell") === col("v.cell") &&
           col("c.vec_id") % 10 =!= 0 && col("v.vec_id") % 10 === 0 &&
-          Similarity.cosineBuiltins(col("c.embedding"), col("v.embedding")) >= 0.35)
+          Oracles.cosineBuiltins(col("c.embedding"), col("v.embedding")) >= 0.35)
       .groupBy(col("c.vec_id")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val got = Similarity.x85_semantic_decontam.run(spark, sf0001)

@@ -47,6 +47,13 @@ trait SparkSpec extends AnyFunSuite {
 
   def jobsOf(body: => Any): Int = jobsAndTasks(body)._1
 
+  /** Janino compiles so far in this JVM: Spark's `CodegenMetrics` records
+    * one sample per compile, on any thread. Take the difference around a
+    * call to count what it compiled.
+    */
+  def compiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** Temp dir scoped to `body`, deleted afterwards — specs were leaving
     * hundreds of createTempDirectory dirs behind per `sbt test` sweep.
     */
